@@ -1,22 +1,20 @@
 #!/usr/bin/env python3
-"""Benchmark of the scheduled ingest path: timed scheduler ticks over
-all 16 provider pipelines, plus a hand-run pass over the query catalog.
+"""Benchmark of the scheduled ingest path and the query catalog: timed
+scheduler ticks over all 16 provider pipelines, and timed passes over
+the ROADMAP's target queries.
 
 Usage:
-  python3 perfbench/run.py --workload tick_fixture|tick_fleet
+  python3 perfbench/run.py --workload tick_fixture|tick_fleet|query_catalog
       [--seed N] [--seconds S] [--trace 0|1]
-  python3 perfbench/run.py --workload query_catalog --data DIR
-      [--seconds S] [--trace 0|1]
 
 Run from the root of a checkout.  The command builds the program from
-source (see build.py), generates the provider payloads from the seed
-(see scaler.py), runs ticks in one JVM for about --seconds, checks every
-tick's outputs, and prints one line per metric followed by one JSON line
+source (see build.py), generates its inputs from the seed (provider
+payloads, see scaler.py; the documents table, see documents.py), runs
+ticks or query passes in one JVM for about --seconds, checks every
+output, and prints one line per metric followed by one JSON line
 {"correct", "attempted", "failed", "metrics"}.  --trace 0 reports the
-end-to-end metrics; --trace 1 adds a listener and a stack sampler and
-reports the per-layer metrics instead.  query_catalog reads its tables
-from --data and is not part of BENCHMARK.json (see README.md, which also
-describes the workloads and metrics).
+end-to-end metrics; --trace 1 adds probes and reports the per-layer
+metrics instead.  README.md describes the workloads and metrics.
 """
 import argparse
 import json
@@ -34,12 +32,11 @@ sys.dont_write_bytecode = True
 
 import build  # noqa: E402
 import catalog  # noqa: E402
+import documents  # noqa: E402
 import scaler  # noqa: E402
 
-# A tick run must end well inside three minutes, build excluded.
+# A run must end well inside three minutes, build excluded.
 RUN_DEADLINE_S = 170
-# query_catalog is run by hand; one pass takes minutes.
-CATALOG_DEADLINE_S = 1800
 JVM_HEAP = "2g"
 JDK_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -50,10 +47,11 @@ JDK_OPENS = [
     "java.base/sun.security.action", "java.base/sun.util.calendar"]
 
 WORKLOADS = {
-    # every provider at its recorded size; fresh output dir per tick
+    # every provider at its recorded size; fresh output dir per tick.  Run
+    # by hand: BENCHMARK.json leaves it out for the time budget.
     "tick_fixture": {"factors": {p: 1 for p in scaler.PROVIDERS},
                      "variants": ("A",)},
-    # skewed fleet alternating payload variants A/B over one output dir
+    # replicated fleet alternating payload variants A/B over one output dir
     "tick_fleet": {"factors": scaler.FLEET_FACTORS, "variants": ("A", "B")},
 }
 
@@ -140,20 +138,23 @@ def check(result, manifest, workload):
 
 
 def end_to_end(result, setup_s):
-    """The gated end-to-end metrics, and two more that are printed only:
-    with one timed tick per run they spread too widely across runs to
-    gate (see README.md)."""
+    """The gated end-to-end metrics, and three more that are printed only
+    (see README.md): measures_per_s is the fixed measure count of the
+    workload over wall_s, and the other two spread too widely across
+    runs to gate."""
     ticks = result["ticks"]
     med = statistics.median
     walls = [t["wall_s"] for t in ticks]
     measures = [sum(r["measures"] or 0 for r in t["k5"].values()) for t in ticks]
     gated = {
         "wall_s": (med(walls), "s"),
-        "cpu_s": (med([t["cpu_s"] for t in ticks]), "s"),
-        "measures_per_s": (med([m / w for m, w in zip(measures, walls)]), "1/s"),
+        # process CPU net of JIT compilation, which a timed tick this early
+        # in the JVM still shares the cores with
+        "cpu_s": (med([t["cpu_s"] - t["jit_s"] for t in ticks]), "s"),
         "setup_s": (setup_s, "s"),
     }
     printed = {
+        "measures_per_s": (med([m / w for m, w in zip(measures, walls)]), "1/s"),
         "provider_max_s": (med([max(t["provider_s"].values()) for t in ticks]), "s"),
         "heap_peak_mb": (max(t["old_gen_mb"] for t in result["warmup"] + ticks),
                          "MB"),
@@ -212,7 +213,18 @@ def per_layer(result, manifest):
     }
     for p in scaler.PROVIDERS:
         m[f"pipeline.provider_s.{p}"] = (tr["seam_s"][p], "s")
-    return m
+    return {**untouched(("queries.",)), **m}
+
+
+def untouched(prefixes):
+    """Zeros for the per-layer metrics of BENCHMARK.json whose names
+    start with ``prefixes``: the layers a workload never runs (a tick runs
+    no catalog query, a catalog pass no provider pipeline), so that every
+    workload reports every declared metric."""
+    with open(os.path.join(build.ROOT, "BENCHMARK.json")) as f:
+        declared = json.load(f)["per_layer"]
+    return {m["name"]: (0, m["unit"]) for m in declared
+            if m["name"].startswith(prefixes)}
 
 
 def launch(main_class, classpath, plan, work, deadline_s):
@@ -276,28 +288,42 @@ def run_ticks(args, classpath, work, cores, started):
     return attempted, failed, problems, metrics, printed, env, lines
 
 
-def run_catalog(args, classpath, work, cores):
-    plan = {"work_dir": work, "data_dir": os.path.abspath(args.data),
-            "cores": cores, "seconds": args.seconds, "trace": bool(args.trace),
+def run_catalog(args, classpath, work, cores, started):
+    t = time.monotonic()
+    data = os.path.join(work, "data")
+    documents.generate(data, args.seed)
+    gen_s = time.monotonic() - t
+    plan = {"work_dir": work, "data_dir": data, "queries": catalog.QUERIES,
+            "warmup_passes": catalog.WARMUP_PASSES,
+            "min_passes": catalog.MIN_PASSES, "cores": cores,
+            "seconds": args.seconds, "trace": bool(args.trace),
             "result_path": os.path.join(work, "result.json")}
     result = launch("graft.perfbench.CatalogBench", classpath, plan, work,
-                    CATALOG_DEADLINE_S)
+                    RUN_DEADLINE_S - (time.monotonic() - started))
     if isinstance(result, int):
         return result
     with open(os.path.join(work, "oracle_sql.json")) as f:
         oracle_sql = json.load(f)
-    oracle = catalog.oracle_problems(plan["data_dir"], os.path.join(work, "results"),
-                                     oracle_sql, sorted(result["warmup"]["queries"]))
+    oracle = catalog.oracle_problems(data, os.path.join(work, "results"),
+                                     oracle_sql, catalog.QUERIES)
     attempted, failed, problems = catalog.check(result, oracle)
     if args.trace:
-        metrics, printed = catalog.per_layer(result), {}
+        metrics, printed = {**untouched(("pipeline.", "sources.", "sinks.")),
+                            **catalog.per_layer(result)}, {}
     else:
-        metrics, printed = catalog.end_to_end(result)
-    lines = [f"setup {result['setup']['ready_s']:.3f} s (JVM, session, first pass "
-             f"{result['warmup']['elapsed_s']:.3f} s with result writes)"]
-    lines += [f"pass {i}: wall {p['wall_s']:.3f} s, cpu {p['cpu_s']:.3f} s"
-              for i, p in enumerate(result["passes"])]
-    env = dict(result["env"], data=plan["data_dir"])
+        metrics, printed = catalog.end_to_end(result, gen_s)
+    lines = [f"setup {gen_s + result['setup']['ready_s']:.3f} s: generate "
+             f"{gen_s:.3f} s, session {result['setup']['session_s']:.3f} s, "
+             f"first pass {result['warmup']['wall_s']:.3f} s with result writes"]
+    lines += [f"warm-up pass {i + 1}: wall {p['wall_s']:.3f} s"
+              for i, p in enumerate(result["warmup_more"])]
+    lines += [f"pass {i}: wall {p['wall_s']:.3f} s, cpu {p['cpu_s']:.3f} s, "
+              f"jit {p['jit_s']:.3f} s" for i, p in enumerate(result["passes"])]
+    for q in catalog.QUERIES:
+        lines.append(f"  {q:26s} " + "  ".join(
+            f"{p['queries'][q].get('wall_s', float('nan')):7.3f}"
+            for p in [result["warmup"]] + result["warmup_more"] + result["passes"]))
+    env = dict(result["env"], queries=catalog.QUERIES)
     return attempted, failed, problems, metrics, printed, env, lines
 
 
@@ -308,11 +334,7 @@ def main(argv=None):
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=float, default=10)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--data", help="query_catalog only: directory holding the "
-                    "region ... embeddings parquet tables")
     args = ap.parse_args(argv)
-    if args.workload == "query_catalog" and not args.data:
-        ap.error("query_catalog needs --data")
     cores = min(4, nproc())
 
     try:
@@ -324,7 +346,7 @@ def main(argv=None):
     work = os.path.join(build.BUILD_DIR, "work", f"{args.workload}-{args.seed}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
-    out = (run_catalog(args, classpath, work, cores)
+    out = (run_catalog(args, classpath, work, cores, started)
            if args.workload == "query_catalog"
            else run_ticks(args, classpath, work, cores, started))
     if isinstance(out, int):

@@ -204,7 +204,7 @@ class TickBench(spark: SparkSession, configDir: String, cores: Int) {
       "jobs_started" -> jobs)
     trace.fold(base) { tr =>
       base ++ Map("seam_s" -> seamS.toMap, "layer_wall_s" -> layerWall.get,
-        "window_ms" -> Seq(wall0, wall1), "listener" -> summarize(tr, wall0, wall1),
+        "window_ms" -> Seq(wall0, wall1), "listener" -> tr.summary(wall0, wall1, cores),
         "output" -> outputFiles(outDir))
     }
   }
@@ -266,39 +266,6 @@ class TickBench(spark: SparkSession, configDir: String, cores: Int) {
     val fs = dataFiles(new File(outDir))
     Map("files" -> fs.size, "bytes" -> fs.map(_.length).sum)
   }
-
-  /** Per-layer job counts and times, plus Spark-wide totals, for one
-    * traced tick window. */
-  private def summarize(tr: JobTrace, from: Long, to: Long): Map[String, Any] =
-    tr.synchronized {
-      val jobs = tr.jobs.values.toSeq
-      val byLayer = jobs.groupBy(_.layer).map { case (l, js) =>
-        l -> Map("jobs" -> js.size, "job_s" -> js.map(j => j.end - j.start).sum / 1e3,
-          "task_cpu_s" -> js.map(_.cpuNs).sum / 1e9, "tasks" -> js.map(_.tasks).sum)
-      }
-      val byProvider = jobs.groupBy(_.provider.getOrElse("")).map {
-        case (p, js) => p -> js.size }
-      // wall with no task running: window minus the union of task spans
-      val spans = tr.taskSpans.toSeq.map { case (a, b) => (a.max(from), b.min(to)) }
-        .filter { case (a, b) => b > a }.sortBy(_._1)
-      var busy = 0L
-      var cur = (0L, 0L)
-      spans.foreach { case (a, b) =>
-        if (a > cur._2) { busy += cur._2 - cur._1; cur = (a, b) }
-        else cur = (cur._1, cur._2.max(b))
-      }
-      busy += cur._2 - cur._1
-      Map("layers" -> byLayer, "provider_jobs" -> byProvider,
-        "jobs" -> jobs.size, "tasks" -> jobs.map(_.tasks).sum,
-        "task_cpu_s" -> jobs.map(_.cpuNs).sum / 1e9,
-        "task_run_s" -> jobs.map(_.runMs).sum / 1e3,
-        "gc_s" -> jobs.map(_.gcMs).sum / 1e3,
-        "shuffle_read_bytes" -> jobs.map(_.shuffleRead).sum,
-        "shuffle_write_bytes" -> jobs.map(_.shuffleWrite).sum,
-        "spill_bytes" -> jobs.map(_.spill).sum,
-        "input_bytes" -> jobs.map(_.inputBytes).sum,
-        "task_busy_s" -> busy / 1e3, "cores" -> cores)
-    }
 
   /** `ProviderPipeline.run` plus one no-op materialization of each of its
     * outputs, per provider: the cost of sources, transform and measurand

@@ -69,6 +69,39 @@ class JobTrace extends SparkListener {
     }
   }
 
+  /** Per-layer job counts and times, plus Spark-wide totals, of the jobs
+    * recorded since [[start]]; `from`/`to` (epoch ms) bound the window
+    * whose idle time is measured. */
+  def summary(from: Long, to: Long, cores: Int): Map[String, Any] = synchronized {
+    val js0 = jobs.values.toSeq
+    val byLayer = js0.groupBy(_.layer).map { case (l, js) =>
+      l -> Map("jobs" -> js.size, "job_s" -> js.map(j => j.end - j.start).sum / 1e3,
+        "task_cpu_s" -> js.map(_.cpuNs).sum / 1e9, "tasks" -> js.map(_.tasks).sum)
+    }
+    val byProvider = js0.groupBy(_.provider.getOrElse("")).map {
+      case (p, js) => p -> js.size }
+    // wall with no task running: window minus the union of task spans
+    val spans = taskSpans.toSeq.map { case (a, b) => (a.max(from), b.min(to)) }
+      .filter { case (a, b) => b > a }.sortBy(_._1)
+    var busy = 0L
+    var cur = (0L, 0L)
+    spans.foreach { case (a, b) =>
+      if (a > cur._2) { busy += cur._2 - cur._1; cur = (a, b) }
+      else cur = (cur._1, cur._2.max(b))
+    }
+    busy += cur._2 - cur._1
+    Map("layers" -> byLayer, "provider_jobs" -> byProvider,
+      "jobs" -> js0.size, "tasks" -> js0.map(_.tasks).sum,
+      "task_cpu_s" -> js0.map(_.cpuNs).sum / 1e9,
+      "task_run_s" -> js0.map(_.runMs).sum / 1e3,
+      "gc_s" -> js0.map(_.gcMs).sum / 1e3,
+      "shuffle_read_bytes" -> js0.map(_.shuffleRead).sum,
+      "shuffle_write_bytes" -> js0.map(_.shuffleWrite).sum,
+      "spill_bytes" -> js0.map(_.spill).sum,
+      "input_bytes" -> js0.map(_.inputBytes).sum,
+      "task_busy_s" -> busy / 1e3, "cores" -> cores)
+  }
+
   override def onJobEnd(j: SparkListenerJobEnd): Unit =
     synchronized { jobs.get(j.jobId) }.foreach(_.end = j.time)
 

@@ -18,7 +18,8 @@ import json
 import os
 import random
 
-FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+FIXTURES = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "src", "test", "resources", "fixtures")
 
 PROVIDERS = [
     "aernode", "airgradient", "airqo", "airqoon", "clarity", "cmu", "cpcb",
@@ -52,17 +53,16 @@ FIXTURE_K5 = {
 FIXTURE_MOBILE_ROWS = {"habitatmap": 3}
 
 # Devices per provider in the tick_fleet workload, as a multiple of the
-# fixture's devices.  Skewed on purpose: PurpleAir dominates (500
-# devices), as in production.  The sizes keep one tick near 20 s on four
-# cores, so that a run (set-up plus one timed tick) stays near a minute.
-# AirQoon keeps its first 100 devices (airqoon.js:97); at 2 fixture
-# devices its factor must stay at or below 50 for the summary to scale.
-FLEET_FACTORS = {
-    "purpleair": 250, "senstate": 160, "clarity": 120, "cmu": 80,
-    "hawanama": 80, "airqo": 60, "habitatmap": 50, "iqair": 50,
-    "aernode": 40, "lovemyair": 40, "airgradient": 30, "cpcb": 30,
-    "data354": 30, "miri": 30, "smartsense": 30, "airqoon": 20,
-}
+# fixture's devices: one shared factor, and a larger one for PurpleAir,
+# the largest provider.  The sizes themselves were chosen for the time
+# budget: a tick stays near 20 s on four cores, so that a run (set-up
+# plus one timed tick) stays under a minute.  AirQoon keeps its first
+# 100 devices (airqoon.js:97); at 2 fixture devices its factor must stay
+# at or below 50 for the summary to scale.
+FLEET_FACTOR = 20
+PURPLEAIR_FLEET_FACTOR = 250
+FLEET_FACTORS = {p: PURPLEAIR_FLEET_FACTOR if p == "purpleair" else FLEET_FACTOR
+                 for p in PROVIDERS}
 # Share of station devices whose metadata differs between variants.
 CHANGED_SHARE = 0.03
 
