@@ -187,23 +187,11 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // Local-iteration hooks (driver leaves all three unset):
+    // Local-iteration hooks (driver leaves both unset):
     // SPARK_GRAFT_BENCH_ONLY=x2,x16 times only matching queries;
-    // SPARK_GRAFT_SHINGLE_ASSEMBLY=narrow|window pins the n-gram
-    // assembly strategy for A/B measurement (see Dedup.assembleNgrams);
-    // SPARK_GRAFT_CONF=k=v,k=v sets arbitrary session confs — the
-    // TimeQ strategy-switch hook, here so A/Bs get the bench's own
-    // min-of-N + warmup + slate methodology instead of TimeQ's
-    // single-shot count.
-    sys.env.get("SPARK_GRAFT_SHINGLE_ASSEMBLY")
-      .foreach(v => spark.conf.set("spark.graft.shingleAssembly", v))
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => spark.conf.set(k, v)
-        case _ => sys.error(s"SPARK_GRAFT_CONF entry '$kv' is not " +
-          "key=value (comma-separated; values must not contain commas)")
-      }
-    })
+    // SPARK_GRAFT_CONF=k=v,k=v sets session confs under the bench's own
+    // min-of-N + warmup + slate methodology.
+    graft.tools.DevConf.fromEnv.foreach { case (k, v) => spark.conf.set(k, v) }
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val maxReruns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RERUNS", "4").toInt.max(0)

@@ -5,7 +5,8 @@ import org.apache.spark.sql.SparkSession
   * `sbt "runMain graft.ExplainQ <query> [sfDir] [mode]"` prints the
   * query's plan (`formatted` by default) so operator work can iterate
   * on the physical plan — codegen spans, pushed filters, exchanges —
-  * not just on timings. */
+  * not just on timings.  `SPARK_GRAFT_CONF=k=v,...` sets session confs
+  * first. */
 object ExplainQ {
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -19,15 +20,7 @@ object ExplainQ {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // strategy-switch hook for before/after plan capture (same as
-    // TimeQ/Bench): SPARK_GRAFT_CONF="spark.graft.rankIndexImpl=rows"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => spark.conf.set(k, v)
-        case _ => sys.error(s"SPARK_GRAFT_CONF entry '$kv' is not " +
-          "key=value (comma-separated; values must not contain commas)")
-      }
-    })
+    graft.tools.DevConf.fromEnv.foreach { case (k, v) => spark.conf.set(k, v) }
     SparkEntry.queries(name)(spark, sfDir).explain(mode)
     spark.stop()
   }

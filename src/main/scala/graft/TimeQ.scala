@@ -8,15 +8,7 @@ object TimeQ {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // ad-hoc A/B of session-conf strategy switches:
-    // SPARK_GRAFT_CONF="spark.graft.minhashImpl=explode,..."
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => spark.conf.set(k, v)
-        case _ => sys.error(s"SPARK_GRAFT_CONF entry '$kv' is not " +
-          "key=value (comma-separated; values must not contain commas)")
-      }
-    })
+    graft.tools.DevConf.fromEnv.foreach { case (k, v) => spark.conf.set(k, v) }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     for (name <- args; i <- 1 to 2) {
       val t0 = System.nanoTime()

@@ -1,7 +1,6 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Real audio decode on the JDK's `javax.sound.sampled` — WAV (RIFF),
   * AIFF/AIFC, and AU payloads decode natively with ZERO new
@@ -155,8 +154,8 @@ object WavAudioCodec {
     * Scale shape: ZERO shuffle and zero explode — fingerprinting a
     * 100 TB embedding table is a map-only pass.  The physical form is
     * [[graft.plans.EnvelopeFpExpr]], a native codegen expression (the
-    * round-13 rehearsal measured the pretty HOF composition below at
-    * ~8 ms/row — higher-order functions are CodegenFallback, so every
+    * round-13 rehearsal measured the declarative HOF composition, now
+    * the test oracle, at ~8 ms/row — higher-order functions are CodegenFallback, so every
     * lambda step runs interpreted; the kernel is ~1000× off that).
     * This is also the SQL-replayable cross-check of the JVM audio
     * kernel: the x99 oracle recomputes it in DuckDB from
@@ -164,24 +163,6 @@ object WavAudioCodec {
     * plain-Scala bit-for-bit. */
   def envelopeFp(emb: Column, W: Int = 9): Column =
     graft.plans.EnvelopeFp.envelopeFp(emb, W)
-
-  /** The declarative HOF form of [[envelopeFp]] — semantically
-    * identical (parity-pinned), kept as the executable specification
-    * the codegen kernel is tested against.  Not the production path:
-    * interpreted lambda evaluation makes it ~8 ms/row. */
-  private[graft] def envelopeFpHof(emb: Column, W: Int = 9): Column = {
-    val n = size(emb)
-    val en = transform(sequence(lit(0), lit(W - 1)), w => {
-      val vs = filter(emb, (_, i) =>
-        floor(i.cast("double") * W / n) === w.cast("long"))
-      aggregate(vs, lit(0.0d),
-        (acc, x) => acc + x.cast("double") * x.cast("double"),
-        acc => acc / size(vs))
-    })
-    aggregate(sequence(lit(0), lit(W - 2)), lit(0L), (acc, w) =>
-      acc + when(element_at(en, w + 2) > element_at(en, w + 1),
-        call_function("shiftleft", lit(1L), w.cast("int"))).otherwise(0L))
-  }
 
   def aHash64(mono: Array[Short]): Long = {
     if (mono.isEmpty) return 0L

@@ -49,6 +49,9 @@ import org.apache.spark.sql.functions._
   */
 object Bpe {
 
+  @transient private lazy val log =
+    org.slf4j.LoggerFactory.getLogger("graft.ext.Bpe")
+
   /** One corpus pass → (word, cnt), the vocabulary-sized table all
     * rounds run on. */
   def wordCounts(docs: DataFrame, textCol: String): DataFrame =
@@ -258,53 +261,44 @@ object Bpe {
                       merges: Int): DataFrame = {
     val words = docs.select(col(idCol).as("doc_id"),
       explode(TextAnalysis.tokens(col(textCol))).as("word"))
-    // Two physical strategies, identical output (BpeSpec pins the
-    // equivalence), selected by `spark.graft.bpeEncodeImpl`:
-    //
-    //  - `local` (default, round 20): ONE distributed job — the
-    //    (word, cnt) fold — then the whole train+encode runs on the
-    //    collected vocabulary driver-side: [[localMergeLoop]]'s final
-    //    streams ARE each word's encoded form, so the word→n_syms
-    //    dimension comes back as a driver-built broadcast table with
-    //    no second corpus scan and no per-round argmax jobs (the old
-    //    path drove 2 jobs per merge round + a distinct-word replay).
-    //    The driver collect is capped (`spark.graft.bpeEncodeMaxCollectWords`,
-    //    default 10M) and AUTO-DISPATCHES (round 21): a vocabulary past
-    //    the cap falls back to `rounds` instead of throwing — the
-    //    cap+1-limited collect is itself the size probe, so the happy
-    //    path pays no extra count() job and the 100 TB path degrades to
-    //    the distributed trainer instead of erroring out.
-    //  - `rounds`: the per-round distributed trainer + codegen replay
-    //    over the distinct-word table; kept selectable for measurement
-    //    and taken automatically for vocabularies past the collect cap.
-    val impl = docs.sparkSession.conf.get("spark.graft.bpeEncodeImpl", "local")
+    // ONE distributed job — the (word, cnt) fold — then the whole
+    // train+encode runs on the collected vocabulary driver-side:
+    // [[localMergeLoop]]'s final streams ARE each word's encoded form,
+    // so the word→n_syms dimension comes back as a driver-built
+    // broadcast table with no second corpus scan and no per-round
+    // argmax jobs.  The driver collect is capped
+    // (`spark.graft.bpeEncodeMaxCollectWords`, default 10M); the
+    // cap+1-limited collect is itself the size probe, so a vocabulary
+    // past the cap falls back to the per-round distributed trainer +
+    // codegen replay over the distinct-word table, with no extra
+    // count() job on the happy path (BpeSpec pins both paths equal).
     val maxCollect = docs.sparkSession.conf
       .get("spark.graft.bpeEncodeMaxCollectWords", "10000000").toLong
-    val collected =
-      if (impl == "local")
-        tryCollectWordTable(wordCounts(docs, textCol), maxCollect)
-      else None
     val wordSyms =
-      if (collected.isDefined) {
-        val spark = docs.sparkSession
-        import spark.implicits._
-        val rows = collected.get
-        val (_, streams) = localMergeLoop(rows, merges)
-        rows.indices.map(i =>
-            (rows(i)._1, streams(i).trim.split("  ").length.toLong))
-          .toDF("word", "__n_syms")
-      } else {
-        val learned = bpeTrain(docs, textCol, merges)
-          .orderBy(col("round")).select(col("sym_a"), col("sym_b")).collect()
-          .map(r => (r.getString(0), r.getString(1)))
-        val start = concat(lit(" "),
-          array_join(split(col("word"), ""), "  "), lit(" "))
-        val encoded = learned.foldLeft(start) { case (e, (a, b)) =>
-          call_function("replace", e, lit(s" $a  $b "), lit(s" ${a + b} "))
-        }
-        words.select(col("word")).distinct()
-          .select(col("word"),
-            size(split(trim(encoded), "  ")).cast("long").as("__n_syms"))
+      tryCollectWordTable(wordCounts(docs, textCol), maxCollect) match {
+        case Some(rows) =>
+          val spark = docs.sparkSession
+          import spark.implicits._
+          val (_, streams) = localMergeLoop(rows, merges)
+          rows.indices.map(i =>
+              (rows(i)._1, streams(i).trim.split("  ").length.toLong))
+            .toDF("word", "__n_syms")
+        case None =>
+          log.warn("bpeEncodeCounts: vocabulary exceeds " +
+            s"spark.graft.bpeEncodeMaxCollectWords=$maxCollect; falling " +
+            "back from the driver-side encode to the distributed rounds " +
+            "trainer")
+          val learned = bpeTrain(docs, textCol, merges)
+            .orderBy(col("round")).select(col("sym_a"), col("sym_b")).collect()
+            .map(r => (r.getString(0), r.getString(1)))
+          val start = concat(lit(" "),
+            array_join(split(col("word"), ""), "  "), lit(" "))
+          val encoded = learned.foldLeft(start) { case (e, (a, b)) =>
+            call_function("replace", e, lit(s" $a  $b "), lit(s" ${a + b} "))
+          }
+          words.select(col("word")).distinct()
+            .select(col("word"),
+              size(split(trim(encoded), "  ")).cast("long").as("__n_syms"))
       }
     words.join(broadcast(wordSyms), "word")
       .groupBy(col("doc_id"))

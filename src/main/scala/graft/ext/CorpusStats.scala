@@ -512,10 +512,10 @@ object CorpusStats {
     * every row through ONE task — so it cannot rank a corpus.  This is
     * the distributed shape: range-repartition on the order columns
     * (parallel sort, the same machinery as `orderBy`), attach a local
-    * per-partition index imperatively (per-partition iterator — one of
-    * the rare justified `mapPartitions`), then add each partition's
-    * global offset, computed from the #partitions-row count table via
-    * a broadcast triangular self-join (no driver collect, no window).
+    * per-partition index decoded from `monotonically_increasing_id`,
+    * then add each partition's global offset, computed from the
+    * #partitions-row count table via a broadcast triangular self-join
+    * (no driver collect, no window).
     *
     * The sorted frame is localCheckpointed because both the offsets and
     * the final join read it — the price is one materialization of the
@@ -529,8 +529,6 @@ object CorpusStats {
   def globalRank(df: DataFrame, orderCols: Seq[Column],
                  rankName: String = "rank",
                  partitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{IntegerType, LongType}
     // the scratch columns and the rank column are appended to the
     // caller's schema — a collision would silently clobber caller data
     // in the final drop/withColumn
@@ -541,44 +539,23 @@ object CorpusStats {
         s"reserved names (__pid, __idx, __offset) or rankName=$rankName")
     val n = if (partitions > 0) partitions
             else df.sparkSession.sessionState.conf.numShufflePartitions
-    // (pid, in-partition index) attachment — two physical strategies,
-    // identical output (CorpusStatsSpec pins the equivalence), selected
-    // by `spark.graft.rankIndexImpl`:
-    //
-    //  - `codegen` (default, round 20): decode BOTH scratch columns
-    //    from ONE `monotonically_increasing_id()` — the id is
-    //    `partitionId << 33 | in-partition-row-index` by definition, so
-    //    `__pid = id >> 33` and `__idx = id & (2³³−1)` are two plain
-    //    bit-ops and the sorted frame never leaves whole-stage codegen.
-    //  - `rows`: the round-13 `mapPartitions` + external-Row encoder —
-    //    it de/serializes EVERY row and column across the
-    //    InternalRow↔Row boundary just to append two ints, taxing the
-    //    whole rank family (x57/x79/x83/x84) per-task; kept selectable
-    //    for measurement.
+    // (pid, in-partition index) attachment: decode BOTH scratch columns
+    // from ONE `monotonically_increasing_id()` — the id is
+    // `partitionId << 33 | in-partition-row-index` by definition, so
+    // `__pid = id >> 33` and `__idx = id & (2³³−1)` are two plain
+    // bit-ops and the sorted frame never leaves whole-stage codegen
+    // (ExtSpec pins it against the mapPartitions Row-encoder oracle).
     //
     // The id expression is nondeterministic-flagged, which is exactly
     // right here: nothing may reorder across it, and the immediate
     // localCheckpoint freezes the values it produced.
-    val impl = df.sparkSession.conf.get("spark.graft.rankIndexImpl", "codegen")
-    val sorted = df.repartitionByRange(n, orderCols: _*)
+    val indexed = df.repartitionByRange(n, orderCols: _*)
       .sortWithinPartitions(orderCols: _*)
-    val indexed = (if (impl == "codegen") {
-      sorted
-        .withColumn("__mid", monotonically_increasing_id())
-        .withColumn("__pid", shiftright(col("__mid"), 33).cast("int"))
-        .withColumn("__idx", col("__mid").bitwiseAND(lit((1L << 33) - 1)))
-        .drop("__mid")
-    } else {
-      val schema = df.schema
-        .add("__pid", IntegerType, nullable = false)
-        .add("__idx", LongType, nullable = false)
-      sorted.mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        it.zipWithIndex.map { case (r, i) =>
-          Row.fromSeq(r.toSeq :+ pid :+ i.toLong)
-        }
-      }(Encoders.row(schema))
-    }).localCheckpoint()
+      .withColumn("__mid", monotonically_increasing_id())
+      .withColumn("__pid", shiftright(col("__mid"), 33).cast("int"))
+      .withColumn("__idx", col("__mid").bitwiseAND(lit((1L << 33) - 1)))
+      .drop("__mid")
+      .localCheckpoint()
     val counts = indexed.groupBy(col("__pid")).agg(count(lit(1)).as("__n"))
     val offsets = counts.as("a")
       .join(counts.as("b"), col("b.__pid") < col("a.__pid"), "left")
@@ -610,8 +587,6 @@ object CorpusStats {
     * partition-dependent order. */
   def globalCumSum(df: DataFrame, orderCols: Seq[Column], valueCol: String,
                    cumName: String = "cum", partitions: Int = 0): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.types.{IntegerType, LongType}
     val reserved = Set("__pid", "__pcum", "__ridx", "__offset", cumName)
     val clash = df.columns.filter(reserved)
     require(clash.isEmpty,
@@ -620,39 +595,15 @@ object CorpusStats {
         s"cumName=$cumName")
     val n = if (partitions > 0) partitions
             else df.sparkSession.sessionState.conf.numShufflePartitions
-    // prefix-sum attachment — two physical strategies, identical output
-    // (ExtSpec pins the equivalence), selected by
-    // `spark.graft.cumIndexImpl`:
-    //
-    //  - `operator` (default, round 20): the
-    //    [[graft.plans.PartitionPrefixSum]] whole-operator extension
-    //    walks InternalRows directly — one bound eval per row, one
-    //    UnsafeProjection append, zero encoder round-trips.
-    //  - `rows`: the original `mapPartitions` + external-Row encoder,
-    //    which de/serializes every row and column just to append three
-    //    scratch columns; kept selectable for measurement.
-    val impl = df.sparkSession.conf.get("spark.graft.cumIndexImpl", "operator")
-    val sorted = df.repartitionByRange(n, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-    val summed = (if (impl == "operator") {
-      graft.plans.PartitionPrefixSum.attach(sorted, valueCol)
-    } else {
-      val valueIdx = df.schema.fieldIndex(valueCol)
-      val schema = df.schema
-        .add("__pid", IntegerType, nullable = false)
-        .add("__pcum", LongType, nullable = false)
-        .add("__ridx", LongType, nullable = false)
-      sorted.mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        var acc = 0L
-        var idx = 0L
-        it.map { r =>
-          acc += r.getAs[Number](valueIdx).longValue()
-          idx += 1
-          Row.fromSeq(r.toSeq :+ pid :+ acc :+ idx)
-        }
-      }(Encoders.row(schema))
-    }).localCheckpoint() // totals derive from this; avoid a second sort
+    // prefix-sum attachment: the [[graft.plans.PartitionPrefixSum]]
+    // whole-operator extension walks InternalRows directly — one bound
+    // eval per row, one UnsafeProjection append, zero encoder
+    // round-trips (ExtSpec pins it against the mapPartitions
+    // Row-encoder oracle)
+    val summed = graft.plans.PartitionPrefixSum.attach(
+        df.repartitionByRange(n, orderCols: _*)
+          .sortWithinPartitions(orderCols: _*), valueCol)
+      .localCheckpoint() // totals derive from this; avoid a second sort
     val totals = summed.groupBy(col("__pid"))
       .agg(max_by(col("__pcum"), col("__ridx")).as("__t"))
     val offsets = totals.as("a")

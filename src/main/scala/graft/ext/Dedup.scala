@@ -31,115 +31,48 @@ object Dedup {
     docs.groupBy(TextAnalysis.fingerprint(col(textCol)).as("fp"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Word n-gram shingles; documents shorter than n collapse to one
-    * whole-text shingle. */
-  def shingles(toks: Column, n: Int): Column =
-    when(size(toks) < n, array(array_join(toks, " ")))
-      .otherwise(transform(sequence(lit(1), size(toks) - (n - 1)),
-        i => concat_ws(" ", (0 until n).map(j =>
-          element_at(toks, i + lit(j))): _*)))
-
-  /** One min-wise hash: lexicographic min of an 8-hex-char (32-bit)
-    * chunk of md5(seed || ':' || shingle).  md5-as-random-oracle gives
-    * independent uniform bits, so the 4 chunks of one digest are 4
-    * independent hash functions — one md5 evaluation yields 4 minhashes.
-    * Bit-identical across engines (the DuckDB oracle mirrors it with
-    * substr(md5(...))). */
-  def minhash(shingleCol: Column, i: Int): Column =
-    array_min(transform(shingleCol,
-      sh => substring(md5(concat(lit((i / 4).toString), lit(":"), sh)),
-        (i % 4) * 8 + 1, 8)))
-
   /** docs(id, text) → (id, sig array) with a k-hash signature over
-    * n-gram shingles.  Two physical strategies, selected by the
-    * `spark.graft.minhashImpl` session conf, identical output (pinned
-    * by DedupSpec's strategy-equivalence test):
-    *
-    *  - `kernel` (default): the custom codegen'd
-    *    [[graft.plans.MinHashSig]] expression computes the whole k-lane
-    *    signature per document row — shingle assembly, md5, per-lane
-    *    min all in one JVM loop.  scan → project, NO explode, NO
-    *    aggregate, NO shuffle: the signature stage scales with mapper
-    *    throughput alone.
-    *  - `explode`: shingles exploded and hashed with plain codegen'd
-    *    `md5` expressions, then min-aggregated per doc (higher-order
-    *    lambdas evaluate interpreted, so per-element hashing inside a
-    *    `transform` was never an option).  One skinny (id, chunk…)
-    *    shuffle; kept selectable for measurement. */
+    * n-gram shingles.  The custom codegen'd [[graft.plans.MinHashSig]]
+    * expression computes the whole k-lane signature per document row —
+    * shingle assembly, md5, per-lane min all in one JVM loop.
+    * scan → project, NO explode, NO aggregate, NO shuffle: the
+    * signature stage scales with mapper throughput alone.  DedupSpec
+    * pins it bit-for-bit against the exploded min-aggregate oracle. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, k: Int = 8): DataFrame = {
-    val impl = docs.sparkSession.conf.get("spark.graft.minhashImpl", "kernel")
-    if (impl == "kernel") {
-      import graft.plans.MinHashSig.minhashSig
-      return docs
-        .select(col(idCol).as("doc_id"),
-          TextAnalysis.tokens(col(textCol)).as("toks"))
-        .select(col("doc_id"), minhashSig(col("toks"), n, k).as("sig"))
-        .filter(col("sig").isNotNull)
-    }
-    val exploded = explodedShingles(docs, idCol, textCol, n)
-    val digests = (0 to (k - 1) / 4).map(m =>
-      md5(concat(lit(s"$m:"), col("sh"))))
-    val chunks = (0 until k).map(i =>
-      substring(digests(i / 4), (i % 4) * 8 + 1, 8).as(s"c$i"))
-    exploded.select(col("doc_id") +: chunks: _*)
-      .groupBy(col("doc_id"))
-      .agg(min(col("c0")).as("m0"),
-        (1 until k).map(i => min(col(s"c$i")).as(s"m$i")): _*)
-      .select(col("doc_id"),
-        array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
+    import graft.plans.MinHashSig.minhashSig
+    docs
+      .select(col(idCol).as("doc_id"),
+        TextAnalysis.tokens(col(textCol)).as("toks"))
+      .select(col("doc_id"), minhashSig(col("toks"), n, k).as("sig"))
+      .filter(col("sig").isNotNull)
   }
 
   /** (doc_id, sh) n-gram rows from a (doc_id, toks) frame, n >= 2; rows
-    * with fewer than n tokens contribute nothing.  Two physical
-    * strategies, selected by the `spark.graft.shingleAssembly` session
-    * conf:
-    *
-    *  - `narrow` (default): per-row assembly — n shifted `slice` views
-    *    of the token array are `arrays_zip`ped and exploded, so every
-    *    operator is native/codegen'd and the stage is shuffle-FREE.
-    *    At cluster scale this is the right shape: nothing moves on the
-    *    network until the (doc_id, sh) rows hit their downstream agg.
-    *  - `window`: posexplode + `lead` windows over token position —
-    *    the round-1/2 implementation.  It shuffles the full
-    *    (doc_id, pos, tok) token stream (corpus-sized network) before
-    *    assembling; kept selectable for measurement (PERF.md records
-    *    the sf0.1 comparison).
-    *
-    * Both emit the identical (doc_id, sh) multiset (pinned by
-    * DedupSpec's strategy-equivalence test and the x2/x16/x19 oracles).
-    */
-  private[ext] def assembleNgrams(tokDf: DataFrame, n: Int): DataFrame = {
+    * with fewer than n tokens contribute nothing.  Per-row assembly:
+    * n shifted `slice` views of the token array are `arrays_zip`ped and
+    * exploded, so every operator is native/codegen'd and the stage is
+    * shuffle-FREE — nothing moves on the network until the (doc_id, sh)
+    * rows hit their downstream agg.  DedupSpec pins the output against
+    * the posexplode + `lead` window oracle (PERF.md records the sf0.1
+    * comparison). */
+  private[graft] def assembleNgrams(tokDf: DataFrame, n: Int): DataFrame = {
     require(n >= 2, s"assembleNgrams needs n >= 2, got $n")
-    val strategy = tokDf.sparkSession.conf
-      .get("spark.graft.shingleAssembly", "narrow")
-    val big0 = tokDf.filter(size(col("toks")) >= n)
-    if (strategy == "window") {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-      val leads = (1 until n).map(j => lead(col("tok"), j).over(w))
-      big0.select(col("doc_id"), posexplode(col("toks")).as(Seq("pos", "tok")))
-        .withColumn("__last", leads.last)
-        .withColumn("sh", concat_ws(" ", col("tok") +: leads: _*))
-        .filter(col("__last").isNotNull) // concat_ws would silently skip
-        .select(col("doc_id"), col("sh")) // nulls → short tail shingles
-    } else {
-      // slice(toks, j+1, size) is the array shifted left by j; zipping
-      // n shifts gives (tok_i, tok_i+1, …, tok_i+n-1) structs, null-
-      // padded past the end — dropping structs whose LAST field is null
-      // leaves exactly the size-n+1 full n-grams.
-      val zipped = arrays_zip((0 until n).map(j =>
-        slice(col("toks"), lit(j + 1), size(col("toks"))).as(s"t$j")): _*)
-      big0.select(col("doc_id"), explode(zipped).as("s"))
-        .filter(col(s"s.t${n - 1}").isNotNull)
-        .select(col("doc_id"),
-          concat_ws(" ", (0 until n).map(j => col(s"s.t$j")): _*).as("sh"))
-    }
+    // slice(toks, j+1, size) is the array shifted left by j; zipping
+    // n shifts gives (tok_i, tok_i+1, …, tok_i+n-1) structs, null-
+    // padded past the end — dropping structs whose LAST field is null
+    // leaves exactly the size-n+1 full n-grams.
+    val zipped = arrays_zip((0 until n).map(j =>
+      slice(col("toks"), lit(j + 1), size(col("toks"))).as(s"t$j")): _*)
+    tokDf.filter(size(col("toks")) >= n)
+      .select(col("doc_id"), explode(zipped).as("s"))
+      .filter(col(s"s.t${n - 1}").isNotNull)
+      .select(col("doc_id"),
+        concat_ws(" ", (0 until n).map(j => col(s"s.t$j")): _*).as("sh"))
   }
 
   /** (doc_id, sh) rows of word n-gram shingles via [[assembleNgrams]];
-    * documents shorter than n keep the whole-text-shingle fallback of
-    * [[shingles]].
+    * documents with 1..n-1 tokens collapse to one whole-text shingle.
     *
     * Every consumer is set-semantic (min-agg minhash, distinct-driven
     * decontamination joins), so for n=1 the token array deduplicates
@@ -148,8 +81,8 @@ object Dedup {
     * per-doc repetition factor for free, with bit-identical results
     * (the oracle hashes the full multiset; min over a set equals min
     * over its multiset). */
-  private def explodedShingles(docs: DataFrame, idCol: String,
-                               textCol: String, n: Int): DataFrame = {
+  private[graft] def explodedShingles(docs: DataFrame, idCol: String,
+                                      textCol: String, n: Int): DataFrame = {
     val toks = docs.select(col(idCol).as("doc_id"),
       TextAnalysis.tokens(col(textCol)).as("toks"))
     if (n == 1) {
@@ -177,15 +110,6 @@ object Dedup {
         b => md5(concat(b.cast("string"), lit("|"),
           array_join(slice(col("sig"), b * rows + 1, lit(rows)), ","))))))
       .select(col("doc_id"), col("col").as("band_key"))
-  }
-
-  /** Candidate pairs: docs sharing ≥1 band.  Equi self-join on band_key
-    * (hash-partitioned, AQE-skew-split), deduped. */
-  def lshCandidates(bands: DataFrame): DataFrame = {
-    val a = bands.select(col("band_key"), col("doc_id").as("a"))
-    val b = bands.select(col("band_key"), col("doc_id").as("b"))
-    a.join(b, "band_key").filter(col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
   }
 
   /** Exact Jaccard over distinct token sets for a pair of token arrays. */
@@ -220,16 +144,12 @@ object Dedup {
   private[graft] def encodeTokenSets(docs: DataFrame, idCol: String,
                                      textCol: String,
                                      blockCol: Option[String]): DataFrame = {
-    // hash+distinct+sort as one codegen'd kernel call; the composed
-    // sort_array(array_distinct(transform(…, xxhash64))) evaluates its
-    // lambda interpreted — kept selectable for equivalence measurement
-    val impl = docs.sparkSession.conf.get("spark.graft.encodeImpl", "kernel")
-    val enc: Column => Column =
-      if (impl == "kernel") graft.plans.TokenSetEncode.tokenSetEncode
-      else toks => sort_array(array_distinct(transform(toks, t => xxhash64(t))))
+    // hash+distinct+sort as one codegen'd kernel call (the composed
+    // sort_array(array_distinct(transform(…, xxhash64))) form evaluates
+    // its lambda interpreted; DedupSpec keeps it as the oracle)
     val base = Seq(col(idCol).as("id")) ++ blockCol.map(c => col(c).as("blk"))
-    docs.select(base :+
-      enc(TextAnalysis.tokens(col(textCol))).as("toks"): _*)
+    docs.select(base :+ graft.plans.TokenSetEncode
+      .tokenSetEncode(TextAnalysis.tokens(col(textCol))).as("toks"): _*)
       .withColumn("sz", size(col("toks")))
   }
 
@@ -1120,55 +1040,19 @@ object Dedup {
     outOld.unionByName(outNew)
   }
 
-  /** 16-bit SimHash from md5 nibbles: per bit position b, sum ±1 over
-    * tokens by whether hex nibble b of md5(token) has its high bit set;
-    * fingerprint bit b = (sum > 0).  Engine-portable ('8' ≤ nibble char
-    * compares identically everywhere). */
-  def simhash16(toks: Column): Column =
-    (0 until 16).map { bit =>
-      val contrib = aggregate(toks, lit(0),
-        (acc, t) => acc +
-          when(substring(md5(t), bit + 1, 1) >= "8", 1).otherwise(-1))
-      when(contrib > 0, lit(1 << bit)).otherwise(lit(0))
-    }.reduce(_ + _)
-
-  /** Hamming distance between two simhash ints (for near-dup banding on
-    * fingerprints). */
-  def hamming16(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
-
-  /** docs(id, text) → (doc_id, simhash) via the explode + codegen'd
-    * CASE-sum + re-aggregate plan — same numbers as [[simhash16]]
-    * (which folds with 16 interpreted higher-order lambdas per row),
-    * ~3× faster on token-heavy corpora.  One skinny shuffle of
-    * (id, 16×int) rows. */
+  /** docs(id, text) → (doc_id, simhash): 16-bit SimHash from md5
+    * nibbles — per bit position b, sum ±1 over tokens by whether hex
+    * nibble b of md5(token) has its high bit set; fingerprint bit b =
+    * (sum > 0).  One codegen'd [[graft.plans.SimHashSig]] call per
+    * document: scan → project, no explode/aggregate/shuffle.  Docs
+    * with no tokens get no row. */
   def simhashFingerprints(docs: DataFrame, idCol: String,
                           textCol: String): DataFrame = {
-    // `kernel` (default): one codegen'd [[graft.plans.SimHashSig]] call
-    // per document — scan → project, no explode/aggregate/shuffle.
-    // `explode` keeps the row-expanded plan selectable for A/B.
-    val impl = docs.sparkSession.conf.get("spark.graft.simhashImpl", "kernel")
-    if (impl == "kernel") {
-      import graft.plans.SimHashSig.simhashSig
-      return docs
-        .select(col(idCol).as("doc_id"),
-          simhashSig(TextAnalysis.tokens(col(textCol))).as("simhash"))
-        .filter(col("simhash").isNotNull)
-    }
-    val exploded = docs.select(col(idCol).as("doc_id"),
-      explode(TextAnalysis.tokens(col(textCol))).as("tok"))
-    val h = md5(col("tok"))
-    val contribs = (0 until 16).map { bit =>
-      when(substring(h, bit + 1, 1) >= "8", 1).otherwise(-1).as(s"b$bit")
-    }
-    exploded.select(col("doc_id") +: contribs: _*)
-      .groupBy(col("doc_id"))
-      .agg(sum(col("b0")).as("s0"),
-        (1 until 16).map(i => sum(col(s"b$i")).as(s"s$i")): _*)
-      .select(col("doc_id"),
-        (0 until 16).map(b =>
-          when(col(s"s$b") > 0, lit(1 << b)).otherwise(lit(0)))
-          .reduce(_ + _).cast("int").as("simhash"))
+    import graft.plans.SimHashSig.simhashSig
+    docs
+      .select(col(idCol).as("doc_id"),
+        simhashSig(TextAnalysis.tokens(col(textCol))).as("simhash"))
+      .filter(col("simhash").isNotNull)
   }
 
   /** Cross-source duplication matrix — curation analytics over a
@@ -1208,7 +1092,7 @@ object Dedup {
     * text rides a shuffle.  The n-gram→doc-count table is vocabulary-
     * sized; the final per-doc agg is a standard partial+final hash
     * aggregate.  Documents shorter than n collapse to one whole-text
-    * shingle (same fallback as [[shingles]]), so every input doc gets
+    * shingle (the [[explodedShingles]] fallback), so every input doc gets
     * an output row. */
   def duplicatedNgramFraction(docs: DataFrame, idCol: String,
                               textCol: String, n: Int = 3): DataFrame = {

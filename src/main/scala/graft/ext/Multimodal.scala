@@ -112,8 +112,8 @@ object Multimodal {
     val defaultMaxPixels: Long = 64L * 1024 * 1024
 
     /** Per-job override for the decode pixel cap (same conf idiom as
-      * `spark.graft.shingleAssembly` / `spark.graft.simhashImpl`). Read
-      * on the driver at plan-build time and captured in the closure. */
+      * `spark.graft.maxDecodeFrames`). Read on the driver at plan-build
+      * time and captured in the closure. */
     val maxPixelsConf = "spark.graft.maxDecodePixels"
 
     def maxPixelsFor(spark: SparkSession): Long =

@@ -70,11 +70,6 @@ object ColumnFns {
   def localToUtcShifted(ts: Column, zone: String): Column =
     to_utc_timestamp(ts - expr("INTERVAL 15 MINUTES"), zone)
 
-  /** F8 — zone-local now-windowing (`cpcb.js:76-78`): UTC instant viewed in a
-    * zone, minus a lookback. */
-  def zoneLocalCutoff(utcTs: Column, zone: String, lookbackHours: Int): Column =
-    from_utc_timestamp(utcTs, zone) - expr(s"INTERVAL $lookbackHours HOURS")
-
   /** F9 — hour-beginning → hour-ending shift (`iqair.js:142`,
     * `airgradient.js:161-163`). */
   def hourEnding(ts: Column): Column = ts + expr("INTERVAL 1 HOUR")
@@ -85,9 +80,6 @@ object ColumnFns {
     transform(
       sequence(trunc(from, "MM"), trunc(to, "MM"), expr("INTERVAL 1 MONTH")),
       m => date_format(m, "yyyy-MM"))
-
-  /** F11 — previous-day math incl. month boundary (`iqair.js:24-26`). */
-  def previousDay(d: Column): Column = date_sub(d, 1)
 
   /** F12 — `' '`→`'T'` timestamp fix (`miri.js:140`). */
   def spaceToT(c: Column): Column = regexp_replace(c, " ", "T")
@@ -107,13 +99,5 @@ object ColumnFns {
     val off = round(lon / 15.0, 0).cast("int")
     concat(lit("UTC"), when(off >= 0, concat(lit("+"), off.cast("string")))
       .otherwise(off.cast("string")))
-  }
-
-  /** F13 — melt / unpivot: wide reading → long (parameter, value) rows
-    * (`airgradient.js:164-170`, `purpleair.js:58-76`).  The core reshape of
-    * the whole reference pipeline; built-in `stack` generator. */
-  def meltExpr(cols: Seq[(String, String)]): Column = {
-    val pairs = cols.map { case (name, col) => s"'$name', `$col`" }.mkString(", ")
-    expr(s"stack(${cols.size}, $pairs) as (parameter, value)")
   }
 }

@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Whole-document MinHash signature as a single narrow expression.
   *
-  * [[graft.ext.Dedup.minhashSignatures]]'s default physical strategy
-  * (`spark.graft.minhashImpl=kernel`): instead of exploding (doc,
+  * [[graft.ext.Dedup.minhashSignatures]]'s physical form: instead of
+  * exploding (doc,
   * shingle) rows, hashing each with k/4 codegen'd `md5` expressions and
   * min-aggregating back per document (a corpus-sized explode plus a
   * partial+final hash aggregate and its exchange), this expression
@@ -25,18 +25,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * stage of the LSH pipelines becomes scan → project, which at cluster
   * scale means it is bounded by mapper throughput alone.
   *
-  * Bit-identical to the exploded strategy (pinned by DedupSpec's
-  * strategy-equivalence test and the x2/x3 oracle replays): lane i of
+  * Bit-identical to the exploded min-aggregate form (pinned by
+  * DedupSpec's and PropertySpec's oracle tests and the x2/x3 oracle
+  * replays): lane i of
   * the signature is the lexicographic minimum over shingles of
   * `substring(hex(md5(concat(i/4, ":", shingle))), (i%4)*8, 8)` — hex
   * chars are ASCII, so unsigned byte order equals the UTF8String
   * binary order the min-agg uses.
   *
-  * Shingle semantics (mirrors `Dedup.explodedShingles`):
+  * Shingle semantics (the same as `Dedup.explodedShingles`):
   *  - n == 1 → the DISTINCT token set (min is multiplicity-blind);
   *  - n >= 2 → all word n-grams joined by a single space; documents
   *    with fewer than n tokens collapse to one whole-text shingle;
-  *  - an empty token array yields NULL (the exploded strategy emits no
+  *  - an empty token array yields NULL (the exploded form emits no
   *    row for such a document) — callers filter nulls.
   */
 case class MinHashSig(child: Expression, n: Int, k: Int)

@@ -11,20 +11,20 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 
 /** Whole-document 16-bit SimHash as a single narrow expression — the
-  * [[MinHashSig]] treatment applied to the other sketch family
-  * (`spark.graft.simhashImpl=kernel`, the default).
+  * [[MinHashSig]] treatment applied to the other sketch family, and
+  * [[graft.ext.Dedup.simhashFingerprints]]'s physical form.
   *
-  * Replaces the exploded plan (one row per token OCCURRENCE, 16
-  * codegen'd CASE columns, partial+final sum aggregate and its
-  * exchange) with one static-kernel call per document row: md5 per
-  * token, ±1 nibble votes accumulated in a 16-int array, threshold to
-  * the fingerprint — zero intermediate rows, zero shuffle.
+  * One static-kernel call per document row: md5 per token, ±1 nibble
+  * votes accumulated in a 16-int array, threshold to the fingerprint —
+  * zero intermediate rows, zero shuffle (no per-token explode, no sum
+  * aggregate, no exchange).
   *
-  * Bit-identical to the exploded strategy (equivalence test + x5/x5b
-  * oracle replays): bit b votes +1 iff hex digit b of md5(token) is
-  * >= '8' (the nibble's high bit), multiplicity COUNTS (unlike MinHash,
-  * SimHash weights repeated tokens), and an empty token array yields
-  * NULL (the exploded plan emits no row). */
+  * Bit-identical to the higher-order-function fold kept as the test
+  * oracle (ExtSpec, PropertySpec) and to the x5/x5b oracle replays:
+  * bit b votes +1 iff hex digit b of md5(token) is >= '8' (the nibble's
+  * high bit), multiplicity COUNTS (unlike MinHash, SimHash weights
+  * repeated tokens), and an empty token array yields NULL (no
+  * fingerprint for a document without tokens). */
 case class SimHashSig(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = IntegerType

@@ -2630,7 +2630,7 @@ object ExtQueries {
     "x55b_edit_neardup64" -> ((s, d) =>
       Dedup.simhashEditPairs64(Tables.documents(s, d),
         "doc_id", "text", maxDist = 40,
-        scheme = s.conf.get("spark.graft.editdup64.scheme", "auto"))),
+        scheme = "auto")),
 
     // perceptual (dHash) fingerprint per media payload — real 9×8
     // box-downsample dHash when the payload decodes as an image, the
@@ -2670,10 +2670,9 @@ object ExtQueries {
               |ELSE text END""".stripMargin)))
         .withColumn("doc_id", col("doc_id") + lit(10000000L))
       val media = Multimodal.mediaFromDocuments(docs.unionByName(pert))
-      // blocking-scheme knob (PERF.md A/B): auto picks halved12 below
-      // the saturation threshold, combo8 above — identical output
-      Multimodal.nearDupPairs(s, media, maxDist = 4,
-        scheme = s.conf.get("spark.graft.imageBandScheme", "auto"))
+      // auto blocking (PERF.md A/B): halved12 below the saturation
+      // threshold, combo8 above — identical output
+      Multimodal.nearDupPairs(s, media, maxDist = 4, scheme = "auto")
     }),
 
     // §2.9 ingest-time perceptual near-dup gate (stream-static dHash
@@ -3012,7 +3011,8 @@ object ExtQueries {
        |              i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])
        |  END AS sh FROM t)""".stripMargin
 
-  /** Mirrors [[Dedup.minhash]]: 8-hex chunk (i%4) of md5((i/4) ':' x). */
+  /** Mirrors [[graft.plans.MinHashSig]] lane i: 8-hex chunk (i%4) of
+    * md5((i/4) ':' x). */
   private def duckMinhash(i: Int): String =
     s"list_min(list_transform(sh, x -> substr(md5('${i / 4}:' || x), ${(i % 4) * 8 + 1}, 8)))"
 

@@ -65,11 +65,4 @@ object Ingest {
     df.withColumn("__rn", row_number().over(Window.orderBy(orderCol)))
       .filter(col("__rn") > 1).drop("__rn")
   }
-
-  /** S8 — secrets/config merge: override map wins over source row
-    * (`utils.js:90-122`, `providers.js:42-45`).  Driver-side config,
-    * out of the data plane. */
-  def mergeConfig(base: Map[String, String],
-                  overrides: Map[String, String]): Map[String, String] =
-    base ++ overrides
 }

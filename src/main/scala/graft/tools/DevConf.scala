@@ -1,0 +1,24 @@
+package graft.tools
+
+/** `key=value` session-conf entries for the dev mains: `Bench`,
+  * `ExplainQ` and `TimeQ` read them from the `SPARK_GRAFT_CONF` env var
+  * (comma-separated, so values must not contain commas);
+  * `RepeatProfile` takes them as trailing arguments. */
+object DevConf {
+
+  /** Splits each entry at its first `=`; an entry without one fails
+    * with its text and `source` named. */
+  def parse(entries: Seq[String], source: String): Seq[(String, String)] =
+    entries.map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => k -> v
+        case _ => throw new IllegalArgumentException(
+          s"$source entry '$kv' is not key=value")
+      }
+    }
+
+  /** The entries of `SPARK_GRAFT_CONF`, none when it is unset. */
+  def fromEnv: Seq[(String, String)] =
+    sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(v => parse(v.split(",").toSeq, "SPARK_GRAFT_CONF"))
+}

@@ -9,16 +9,13 @@ import org.apache.spark.sql.SparkSession
   * wall time with its per-stage duration/task/GC breakdown, so a wide
   * bench spread can be attributed to a concrete stage (GC, skewed
   * task, scheduler delay) instead of guessed at.  Trailing `key=value`
-  * args become session conf (e.g. an A/B of a plan knob like
-  * `spark.graft.imageBandScheme=halved12`). */
+  * args become session conf. */
 object RepeatProfile {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("x22_semantic_prune")
     val reps = args.lift(1).map(_.toInt).getOrElse(8)
     val sf = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val confs = args.drop(3).map { a =>
-      val Array(k, v) = a.split("=", 2); (k, v)
-    }
+    val confs = DevConf.parse(args.drop(3).toSeq, "argument")
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")

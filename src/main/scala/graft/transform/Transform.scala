@@ -27,11 +27,6 @@ object Transform {
   def dropNullMeasures(df: DataFrame, valueCol: String = "value"): DataFrame =
     df.filter(col(valueCol).isNotNull && !isnan(col(valueCol)))
 
-  /** F2 — sensor id `"{source}-{node}-{parameter}"` (`purpleair.js:63`). */
-  def withSensorId(df: DataFrame, source: Column, node: Column,
-                   parameter: Column): DataFrame =
-    df.withColumn("sensor_id", ColumnFns.synthId(source, node, parameter))
-
   /** Timestamp-convention zoo (SURVEY §7.4.1) — table-driven per-source
     * normalization to UTC TimestampType. */
   sealed trait TsConvention

@@ -84,58 +84,39 @@ class DedupSpec extends SparkSpec {
 
   test("n-gram assembly: narrow and window strategies emit identical " +
     "results; narrow plan is shuffle-free before the agg") {
-    def sigs(strategy: String): Map[Long, Seq[String]] = {
-      spark.conf.set("spark.graft.minhashImpl", "explode")
-      spark.conf.set("spark.graft.shingleAssembly", strategy)
-      try Dedup.minhashSignatures(corpus, "doc_id", "text", n = 3, k = 8)
-        .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-      finally {
-        spark.conf.unset("spark.graft.shingleAssembly")
-        spark.conf.unset("spark.graft.minhashImpl")
-      }
-    }
-    assert(sigs("narrow") == sigs("window"))
-    // narrow: the only exchange is the signature groupBy — no window,
-    // no token-stream shuffle before it.  AQE off so the executed plan
-    // carries literal ShuffleExchangeExec nodes.
+    val toks = corpus.select($"doc_id", TextAnalysis.tokens($"text").as("toks"))
+    def grams(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+      df.as[(Long, String)].collect().toSeq.sorted
+    val narrow = grams(Dedup.assembleNgrams(toks, 3))
+    assert(narrow.nonEmpty)
+    assert(narrow == grams(Oracles.windowNgrams(toks, 3)))
+    // narrow assembly plans no window and no token-stream shuffle: the
+    // first exchange is the caller's downstream agg.  AQE off so the
+    // executed plan carries literal ShuffleExchangeExec nodes.
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.graft.minhashImpl", "explode")
     try {
-      val plan = Dedup.minhashSignatures(corpus, "doc_id", "text", n = 3, k = 8)
-        .queryExecution.executedPlan
+      val plan = Dedup.assembleNgrams(toks, 3).queryExecution.executedPlan
       assert(plan.collect {
         case w: org.apache.spark.sql.execution.window.WindowExec => w
       }.isEmpty, "narrow shingle assembly must not use a window")
-      val exchanges = plan.collect {
+      assert(plan.collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-      }
-      assert(exchanges.size == 1,
-        s"expected exactly the groupBy exchange, got ${exchanges.size}")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.unset("spark.graft.minhashImpl")
-    }
+      }.isEmpty, "narrow shingle assembly must not shuffle")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
   test("minhash kernel expression: bit-identical to the exploded " +
     "strategy for n=1 and n=3; kernel plan is shuffle-free") {
-    def sigs(impl: String, n: Int): Map[Long, Seq[String]] = {
-      spark.conf.set("spark.graft.minhashImpl", impl)
-      try Dedup.minhashSignatures(corpus, "doc_id", "text", n = n, k = 8)
-        .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-      finally spark.conf.unset("spark.graft.minhashImpl")
-    }
-    for (n <- Seq(1, 3)) assert(sigs("kernel", n) == sigs("explode", n),
+    def sigs(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[String]] =
+      df.collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    for (n <- Seq(1, 3)) assert(
+      sigs(Dedup.minhashSignatures(corpus, "doc_id", "text", n = n, k = 8)) ==
+        sigs(Oracles.explodeMinhashSignatures(corpus, "doc_id", "text", n, 8)),
       s"kernel/explode signature mismatch at n=$n")
     // short-doc fallback (fewer tokens than n) and interpreted eval
     val short = Seq((1L, "ab"), (2L, "ab cd")).toDF("doc_id", "text")
-    def shortSigs(impl: String): Map[Long, Seq[String]] = {
-      spark.conf.set("spark.graft.minhashImpl", impl)
-      try Dedup.minhashSignatures(short, "doc_id", "text", n = 3, k = 8)
-        .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-      finally spark.conf.unset("spark.graft.minhashImpl")
-    }
-    assert(shortSigs("kernel") == shortSigs("explode"))
+    assert(sigs(Dedup.minhashSignatures(short, "doc_id", "text", n = 3, k = 8))
+      == sigs(Oracles.explodeMinhashSignatures(short, "doc_id", "text", 3, 8)))
     // the kernel path is scan → project → filter: zero exchanges
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
@@ -170,14 +151,11 @@ class DedupSpec extends SparkSpec {
     "composed HOF form") {
     val docs = Seq((1L, "b a c a b"), (2L, "z"), (3L, ""),
       (4L, "x y z x y z")).toDF("doc_id", "text")
-    def enc(impl: String): Map[Long, Seq[Long]] = {
-      spark.conf.set("spark.graft.encodeImpl", impl)
-      try Dedup.encodeTokenSets(docs, "doc_id", "text", None)
-        .select($"id", $"toks").as[(Long, Seq[Long])].collect().toMap
-      finally spark.conf.unset("spark.graft.encodeImpl")
-    }
-    val k = enc("kernel")
-    assert(k == enc("hof"))
+    def enc(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+      df.select($"id", $"toks").as[(Long, Seq[Long])].collect().toMap
+    val k = enc(Dedup.encodeTokenSets(docs, "doc_id", "text", None))
+    assert(k == enc(docs.select($"doc_id".as("id"),
+      Oracles.hofTokenSetEncode(TextAnalysis.tokens($"text")).as("toks"))))
     assert(k(1L).length == 3 && k(1L) == k(1L).sorted)
   }
 
@@ -595,21 +573,17 @@ class DedupSpec extends SparkSpec {
     val df = spark.range(0, 997).toDF("id") // prime: uneven partitions
       .withColumn("v", pmod(col("id") * 53, lit(89)))
     val order = Seq(col("v").asc, col("id").desc)
-    def run(impl: String): Array[(Long, Long)] = {
-      spark.conf.set("spark.graft.rankIndexImpl", impl)
-      try graft.ext.CorpusStats.globalRank(df, order, partitions = 7)
-        .select(col("id"), col("rank")).as[(Long, Long)]
+    def ranks(ranked: org.apache.spark.sql.DataFrame): Array[(Long, Long)] =
+      ranked.select(col("id"), col("rank")).as[(Long, Long)]
         .collect().sortBy(_._1)
-      finally spark.conf.unset("spark.graft.rankIndexImpl")
-    }
-    val codegen = run("codegen")
-    val rows = run("rows")
+    val codegen =
+      ranks(graft.ext.CorpusStats.globalRank(df, order, partitions = 7))
+    val rows = ranks(Oracles.globalRankRows(df, order, partitions = 7))
     assert(codegen.sameElements(rows),
       "rank strategies diverged: " +
         codegen.zip(rows).find { case (a, b) => a != b }.toString)
-    // and the codegen path really is the default + Row-free: no
+    // and the codegen path is Row-free: no
     // DeserializeToObject/SerializeFromObject in its plan
-    spark.conf.unset("spark.graft.rankIndexImpl")
     val plan = graft.ext.CorpusStats.globalRank(df, order, partitions = 7)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("SerializeFromObject"),
@@ -1122,16 +1096,13 @@ class DedupSpec extends SparkSpec {
     import spark.implicits._
     val rows = (1L to 500L).map(i => (i, (i * 31) % 97 - 48)) // signed
     val df = rows.toDF("k", "v")
-    def run(impl: String): Array[(Long, Long)] = {
-      spark.conf.set("spark.graft.cumIndexImpl", impl)
-      try graft.ext.CorpusStats.globalCumSum(
-          df.repartition(11), Seq(col("k")), "v", partitions = 7)
-        .select(col("k"), col("cum")).as[(Long, Long)]
+    def cums(summed: org.apache.spark.sql.DataFrame): Array[(Long, Long)] =
+      summed.select(col("k"), col("cum")).as[(Long, Long)]
         .collect().sortBy(_._1)
-      finally spark.conf.unset("spark.graft.cumIndexImpl")
-    }
-    val op = run("operator")
-    val rws = run("rows")
+    val op = cums(graft.ext.CorpusStats.globalCumSum(
+      df.repartition(11), Seq(col("k")), "v", partitions = 7))
+    val rws = cums(Oracles.globalCumSumRows(
+      df.repartition(11), Seq(col("k")), "v", partitions = 7))
     assert(op.sameElements(rws),
       "cumsum strategies diverged: " +
         op.zip(rws).find { case (a, b) => a != b }.toString)
@@ -1264,29 +1235,20 @@ class DedupSpec extends SparkSpec {
     assert(flagged == Set(1L, 3L))
   }
 
-  test("simhashFingerprints (explode plan) equals the expression fold") {
+  test("simhashFingerprints equals the expression fold") {
     val docs = Tables.documents(spark, sf0001)
     val fast = Dedup.simhashFingerprints(docs, "doc_id", "text")
-    val ref = docs.select($"doc_id",
-      Dedup.simhash16(TextAnalysis.tokens($"text")).as("simhash"))
+    val ref = Oracles.simhashFold(docs, "doc_id", "text")
     assert(fast.except(ref).count() == 0 && ref.except(fast).count() == 0)
   }
 
   test("simhash: normalized dups identical, near-dups close, distinct far") {
-    val fp = corpus.select($"doc_id",
-      Dedup.simhash16(TextAnalysis.tokens($"text")).as("s"))
+    val fp = Dedup.simhashFingerprints(corpus, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(fp(1L) == fp(2L))
     def ham(a: Int, b: Int) = Integer.bitCount(a ^ b)
     assert(ham(fp(1L), fp(3L)) <= 6)
     assert(ham(fp(1L), fp(3L)) <= ham(fp(1L), fp(4L)))
-    // hamming16 column fn agrees with driver-side bitCount
-    val hc = corpus.as("x").crossJoin(corpus.as("y"))
-      .filter($"x.doc_id" === 1 && $"y.doc_id" === 4)
-      .select(Dedup.hamming16(
-        Dedup.simhash16(TextAnalysis.tokens($"x.text")),
-        Dedup.simhash16(TextAnalysis.tokens($"y.text")))).first().getInt(0)
-    assert(hc == ham(fp(1L), fp(4L)))
   }
 
   test("mergeClusters(saved, delta) equals the full recompute on " +
@@ -2369,25 +2331,6 @@ class BpeSpec extends SparkSpec {
       .bpeEncodeCounts(docs, "doc_id", "text", merges = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.toSeq == Seq((1L, 4L, 4L)), got.toSeq)
-  }
-
-  test("bpeEncodeCounts: local and rounds strategies agree exactly " +
-    "(round-20: driver-side train+encode over the collected vocabulary " +
-    "vs per-round jobs + codegen replay)") {
-    val docs = Seq(
-      (1L, "aaab aaab aaab ab"), (2L, "banana bandana"),
-      (3L, "the the the band banned a banana"),
-      (4L, "zzz"), (5L, "a")).toDF("doc_id", "text")
-    def run(impl: String): Seq[(Long, Long, Long)] = {
-      spark.conf.set("spark.graft.bpeEncodeImpl", impl)
-      try graft.ext.Bpe.bpeEncodeCounts(docs, "doc_id", "text", merges = 5)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSeq.sortBy(_._1)
-      finally spark.conf.unset("spark.graft.bpeEncodeImpl")
-    }
-    val local = run("local")
-    val rounds = run("rounds")
-    assert(local == rounds, s"local $local vs rounds $rounds")
   }
 
   test("bpeEncodeCounts auto-dispatches past the collect cap (round-21): " +

@@ -118,19 +118,15 @@ class PropertySpec extends SparkSpec {
     val texts = samples(doc, 60).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }
     val df = texts.toDF("doc_id", "text")
-    for (n <- Seq(1, 2, 3)) {
-      def sigs(impl: String): Map[Long, Seq[String]] = {
-        spark.conf.set("spark.graft.minhashImpl", impl)
-        try Dedup.minhashSignatures(df, "doc_id", "text", n = n, k = 8)
-          .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-        finally spark.conf.unset("spark.graft.minhashImpl")
-      }
-      assert(sigs("kernel") == sigs("explode"),
-        s"kernel/explode mismatch at n=$n")
-    }
+    def sigs(sig: org.apache.spark.sql.DataFrame): Map[Long, Seq[String]] =
+      sig.collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    for (n <- Seq(1, 2, 3)) assert(
+      sigs(Dedup.minhashSignatures(df, "doc_id", "text", n = n, k = 8)) ==
+        sigs(Oracles.explodeMinhashSignatures(df, "doc_id", "text", n, 8)),
+      s"kernel/explode mismatch at n=$n")
   }
 
-  test("SimHashSig kernel equals the exploded strategy on random corpora " +
+  test("SimHashSig kernel equals the expression fold on random corpora " +
     "(multiplicity-sensitive, ragged docs); kernel plan is shuffle-free") {
     val word = Gen.oneOf("a", "bb", "ccc", "dd", "", "a") // repeats matter
     val doc = Gen.choose(0, 8).flatMap(len => Gen.listOfN(len, word))
@@ -138,13 +134,10 @@ class PropertySpec extends SparkSpec {
     val texts = samples(doc, 60).zipWithIndex
       .map { case (t, i) => (i.toLong, t) }
     val df = texts.toDF("doc_id", "text")
-    def fps(impl: String): Map[Long, Int] = {
-      spark.conf.set("spark.graft.simhashImpl", impl)
-      try Dedup.simhashFingerprints(df, "doc_id", "text")
-        .as[(Long, Int)].collect().toMap
-      finally spark.conf.unset("spark.graft.simhashImpl")
-    }
-    assert(fps("kernel") == fps("explode"))
+    def fps(fp: org.apache.spark.sql.DataFrame): Map[Long, Int] =
+      fp.as[(Long, Int)].collect().toMap
+    assert(fps(Dedup.simhashFingerprints(df, "doc_id", "text")) ==
+      fps(Oracles.simhashFold(df, "doc_id", "text")))
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val plan = Dedup.simhashFingerprints(df, "doc_id", "text")
