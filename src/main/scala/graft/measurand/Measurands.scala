@@ -26,15 +26,15 @@ object Measurands {
     "no3")
 
   /** J2 — filter a provider's lookup table to supported parameters;
-    * fail fast when nothing survives (`measurand.js:59`). */
+    * fail fast when nothing survives (`measurand.js:59`).  Both sides
+    * are driver-side constants, so the filter runs in Scala and the
+    * dimension is a local Dataset of the survivors: no Spark job. */
   def supported(spark: SparkSession,
                 lookups: Seq[MeasurandRule]): Dataset[MeasurandRule] = {
     import spark.implicits._
-    val dim = lookups.toDS()
-    val sup = supportedParameters.toSeq.toDF("parameter")
-    val out = dim.join(sup, Seq("parameter"), "left_semi").as[MeasurandRule]
-    if (out.isEmpty) throw new IllegalArgumentException("No measurands supported.")
-    out
+    val kept = lookups.filter(r => supportedParameters.contains(r.parameter))
+    if (kept.isEmpty) throw new IllegalArgumentException("No measurands supported.")
+    kept.toDS()
   }
 
   /** J1 + F1 — resolve each raw (input_param, value) measure through the

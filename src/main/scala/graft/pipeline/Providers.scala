@@ -62,21 +62,32 @@ object Pipelines {
     * name, run the provider's sink style, return the run summary row.
     * PurpleAir-style providers upsert station docs + CSV measures
     * (`providers.js:94-159`); v0.1-style providers write the JSON
-    * envelope (`providers.js:168-185`). */
+    * envelope (`providers.js:168-185`).  The K5 summary is a local
+    * one-row frame built from the metrics the sink writes observed
+    * ([[Sinks.summarizeObserved]]), so it costs no pass of its own. */
   def processor(spark: SparkSession, provider: String, inputPath: String,
                 outDir: String): DataFrame = {
     val p = registry.getOrElse(provider,
       throw new IllegalArgumentException(s"Unknown provider: $provider"))
-    val batch = p.run(spark, inputPath)
-    p match {
+    sinkBatch(spark, p, p.run(spark, inputPath), inputPath, outDir)
+  }
+
+  /** The sink half of [[processor]]: write `batch` in `p`'s sink style
+    * and return its K5 summary. */
+  private[graft] def sinkBatch(spark: SparkSession, p: ProviderPipeline,
+                               batch: Batch, inputPath: String,
+                               outDir: String): DataFrame = {
+    val provider = p.name
+    val seen = p match {
       case v01 if v01.isV01 =>
-        Sinks.writeEnvelopeJson(batch.measures.drop("flags"), batch.stations,
-          provider, s"$outDir/measures-json/$provider")
+        Sinks.writeEnvelopeJsonObserved(batch.measures.drop("flags"),
+          batch.stations, provider, s"$outDir/measures-json/$provider")._2
       case _ =>
         val stationsJson = Transform.stationJson(batch.stations)
-        Sinks.diffWriteStations(spark, stationsJson, "sensor_node_id", "json",
-          s"$outDir/stations/$provider")
-        Sinks.writeMeasuresCsv(batch.measures, s"$outDir/measures/$provider")
+        val (_, locations) = Sinks.diffWriteStationsObserved(spark,
+          stationsJson, "sensor_node_id", "json", s"$outDir/stations/$provider")
+        val (_, measures) = Sinks.writeMeasuresCsvObserved(batch.measures,
+          s"$outDir/measures/$provider")
         batch.mobileMeasures.foreach(m =>
           Sinks.writeMeasuresCsv(m, s"$outDir/measures/$provider-mobile",
             mobile = true))
@@ -84,8 +95,9 @@ object Pipelines {
           Sinks.writeWatermark(spark, s"$outDir/meta/watermark", provider,
             CmuPipeline.maxFileTimestamp(spark, inputPath))
         }
+        Sinks.Observed(locations, measures)
     }
-    Sinks.summarize(p.name, batch.stations.count(), batch.measures)
+    Sinks.summarizeObserved(provider, seen, batch.stations, batch.measures)
   }
 }
 

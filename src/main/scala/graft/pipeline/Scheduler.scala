@@ -31,12 +31,18 @@ object Scheduler {
     * plane; the default is a no-op. */
   trait RunListener {
     /** Success topic: per-source run summary (K5 shape — source_name,
-      * locations, measures, from, to). */
+      * locations, measures, from, to).  The summary is a materialized
+      * one-row local frame: reading it runs no Spark job. */
     def onSuccess(provider: String, summary: DataFrame): Unit = ()
     /** Error topic: per-source failure with the captured cause. */
     def onError(provider: String, error: Throwable): Unit = ()
   }
   object NoopListener extends RunListener
+
+  /** Job tag carried by the Spark jobs of one provider's run in
+    * [[runDue]]; a provider that misses the tick deadline has the jobs
+    * under its tag cancelled. */
+  def providerTag(provider: String): String = s"graft-provider-$provider"
 
   /** One scheduler tick for a frequency class ("minute"|"hour"|"day").
     * `inputs` maps provider name → recorded payload path.
@@ -54,7 +60,8 @@ object Scheduler {
     * RunResult error (and to the listener's error topic) instead of
     * wedging the tick forever — the reference's Lambda timeout has the
     * same role.  Providers that finished before the deadline still
-    * return their real results; the straggler's pool thread is
+    * return their real results; the straggler's Spark jobs are
+    * cancelled through its [[providerTag]] and its pool thread is
     * interrupted on exit.  Default Inf preserves the old behavior. */
   def runDue(spark: SparkSession, configDir: String, frequency: String,
              inputs: Map[String, String], outDir: String,
@@ -67,7 +74,13 @@ object Scheduler {
     val due = Ingest.readSourceConfigs(spark, configDir)
       .filter(col("frequency") === frequency)
       .select(col("provider")).collect().map(_.getString(0)).toSeq.sorted
-    def runOne(provider: String): RunResult =
+    def runOne(provider: String): RunResult = {
+      // The session tag reaches every SQL execution of this thread; the
+      // context tag also reaches the jobs Spark runs outside one
+      // (schema inference, RDD actions).
+      val tag = providerTag(provider)
+      spark.addTag(tag)
+      spark.sparkContext.addJobTag(tag)
       try {
         val input = inputs.getOrElse(provider,
           throw new IllegalArgumentException(s"no recorded input for $provider"))
@@ -87,7 +100,11 @@ object Scheduler {
           // never see Some(null).
           RunResult(provider, ok = false, None,
             Some(Option(e.getMessage).getOrElse(e.toString)))
+      } finally {
+        spark.sparkContext.removeJobTag(tag)
+        spark.removeTag(tag)
       }
+    }
     if (parallelism <= 1) due.map(runOne)
     else {
       import scala.concurrent.{Await, ExecutionContext, Future, TimeoutException}
@@ -114,6 +131,8 @@ object Scheduler {
           try Await.result(f, remaining)
           catch {
             case _: TimeoutException =>
+              spark.interruptTag(providerTag(p))
+              spark.sparkContext.cancelJobsWithTag(providerTag(p))
               val e = new TimeoutException(
                 s"provider $p exceeded tick timeout $tickTimeout")
               listener.onError(p, e)

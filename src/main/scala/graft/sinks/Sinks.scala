@@ -1,8 +1,13 @@
 package graft.sinks
 
 import graft.model.Schemas
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** Sinks — SURVEY.md §2.8 (K1–K7).
   *
@@ -21,8 +26,47 @@ import org.apache.spark.sql.functions._
   * shuffled hash join when it isn't.  No forced hint: a forced
   * broadcast would hit the 8 GB broadcast hard limit / driver OOM at a
   * very large station dimension instead of degrading gracefully.
+  *
+  * K5 rides on the writes: each provider's run summary takes its
+  * values from `Observation`s on the write jobs the sinks run anyway —
+  * `measures`, `from` and `to` from the measures a sink writes,
+  * `locations` from the stations it reads — so publishing a summary
+  * costs no pass of its own.  [[summarize]] is only the fallback for a
+  * metric Spark pruned (see [[Observed]]).
   */
 object Sinks {
+
+  /** K5 values a sink observed on the rows its write job computed:
+    * `locations` counts the stations it read, `measures` is the
+    * (measures, from, to) row of the measures it wrote.  A value is
+    * None when the write did not run, or when Spark pruned the observed
+    * node from a plan the optimizer or AQE proved empty — its
+    * Observation then completes with an empty row.  None means
+    * unknown, never zero: [[summarizeObserved]] computes it. */
+  final case class Observed(locations: Option[Long] = None,
+                            measures: Option[Row] = None)
+
+  /** The K5 `measures`, `from` and `to` of a measures frame: one
+    * aggregate for the observed metric and the [[summarize]] fallback. */
+  private val measureStats: Seq[Column] = Seq(
+    count(lit(1)).as("measures"),
+    min(col("timestamp")).as("from"),
+    max(col("timestamp")).as("to"))
+
+  private def observeStats(measures: DataFrame, obs: Observation): DataFrame =
+    measures.observe(obs, measureStats.head, measureStats.tail: _*)
+
+  /** Bound on the wait for an Observation after the action that carries
+    * it has returned: the listener bus completes it asynchronously and
+    * drops events when its queue is full. */
+  private val ObservedWait = 10.seconds
+
+  /** The metrics row `obs` completed with; None when it came back empty
+    * (pruned node) or not within [[ObservedWait]].  Call only after an
+    * action over the observed frame has run. */
+  private def observed(obs: Observation): Option[Row] =
+    try Some(Await.result(obs.future, ObservedWait)).filter(_.length > 0)
+    catch { case _: TimeoutException => None }
 
   /** K4 — dry-run redirection (`utils.js:75-80`): when set, every sink
     * path is rebased under a local inspection directory instead of the
@@ -57,21 +101,27 @@ object Sinks {
     * directory is removed (a metadata-only op), leaving no object —
     * same contract as the reference's pre-write check. */
   def writeMeasuresCsv(measures: DataFrame, path: String,
-                       mobile: Boolean = false): Long = {
+                       mobile: Boolean = false): Long =
+    writeMeasuresCsvObserved(measures, path, mobile)._1
+
+  /** [[writeMeasuresCsv]] that also returns the observed K5 (measures,
+    * from, to) row, taken on the timestamp before it renders as text. */
+  private[graft] def writeMeasuresCsvObserved(measures: DataFrame, path: String,
+      mobile: Boolean = false): (Long, Option[Row]) = {
     val header = if (mobile) Schemas.mobileCsvHeader else Schemas.fixedCsvHeader
-    val obs = org.apache.spark.sql.Observation()
+    val obs = Observation()
     val rpath = resolvePath(path)
-    measures
+    observeStats(measures, obs)
       .withColumn("timestamp",
         date_format(col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss'Z'"))
       .select(header.map(col): _*)
-      .observe(obs, count(lit(1)).as("n"))
       .write.mode(SaveMode.Overwrite)
       .option("header", "true").option("compression", "gzip")
       .csv(rpath)
-    val n = obs.get("n").asInstanceOf[Long]
+    val stats = observed(obs)
+    val n = stats.fold(measures.count())(_.getLong(0))
     if (n == 0) deleteQuiet(measures.sparkSession, rpath) // K7
-    n
+    (n, stats)
   }
 
   private def deleteQuiet(spark: SparkSession, path: String): Unit = {
@@ -89,70 +139,84 @@ object Sinks {
                         keyCol: String, jsonCol: String, path: String,
                         force: Boolean = false,
                         verbose: Boolean = false,
-                        verboseLimit: Int = 50): DataFrame = {
-    // session-lifecycle pin (round-20 verdict #1): this entry point is
+                        verboseLimit: Int = 50): DataFrame =
+    diffWriteStationsObserved(spark, stations, keyCol, jsonCol, path, force,
+      verbose, verboseLimit)._1
+
+  /** [[diffWriteStations]] that also returns the observed K5 station
+    * count, taken on the `localCheckpoint` job that always scans the
+    * incoming stations. */
+  private[graft] def diffWriteStationsObserved(spark: SparkSession,
+      stations: DataFrame, keyCol: String, jsonCol: String, path: String,
+      force: Boolean = false, verbose: Boolean = false,
+      verboseLimit: Int = 50): (DataFrame, Option[Long]) =
+    // session-lifecycle scope (round-20 verdict #1): this entry point is
     // handed its session explicitly, so never depend on the calling
     // thread's active-session thread-local — Spark 4's SparkPlan
     // captures getActiveSession.orNull at plan construction, and a
     // thread with an unset/stale thread-local otherwise builds plans
     // whose localCheckpoint dies in LocalTableScanExec.metrics (NPE).
-    SparkSession.setActiveSession(spark)
-    val incoming = stations
-      .withColumn("__hash", md5(col(jsonCol)))
-    val rpath = resolvePath(path)
-    val changed =
-      if (force || !pathExists(spark, rpath)) incoming
-      else {
-        // skinny build side (key + md5 only) but NO broadcast hint: let
-        // AQE pick broadcast vs shuffled-hash from the runtime size —
-        // see the scale note in the object scaladoc.  Under VERBOSE the
-        // previous rendered JSON rides along so the console diff can
-        // show the from-side without a second snapshot read.
-        val prevCols = col(keyCol).as("__k") +:
-          md5(col(jsonCol)).as("__prev_hash") +:
-          (if (verbose) Seq(col(jsonCol).as("__prev_json")) else Nil)
-        val prev = spark.read.parquet(rpath).select(prevCols: _*)
-        incoming.join(prev,
-            incoming(keyCol) === col("__k"), "left")
-          .filter(col("__prev_hash").isNull ||
-            col("__hash") =!= col("__prev_hash"))
-          .drop("__k", "__prev_hash")
-      }
-    // materialize + cut lineage BEFORE overwriting the snapshot the
-    // diff was computed against (self-overwrite hazard)
-    val out = changed.drop("__hash").localCheckpoint()
-    if (verbose) {
-      // VERBOSE parity (`providers.js:104-118`): per changed station,
-      // an Update block rendering the new and previous documents via
-      // [[prettyPrintStation]].  Console output is driver-side by
-      // nature, so it is bounded (`verboseLimit`) — the reference
-      // prints every station because its batches are per-provider
-      // small; at corpus scale use [[stationFieldDiffs]] for the
-      // data-plane form of the same information.
-      out.select(col(keyCol).cast("string"), col(jsonCol),
-          if (out.columns.contains("__prev_json")) col("__prev_json")
-          else lit(null).cast("string"))
-        .limit(verboseLimit).collect().foreach { r =>
-          val (key, now) = (r.getString(0), r.getString(1))
-          println("-------------------------\nUpdate " + key +
-            "\n----------------------> to:")
-          print(prettyPrintStation(now))
-          if (!r.isNullAt(2)) {
-            println("-----------------> from")
-            print(prettyPrintStation(r.getString(2)))
-          }
-          println(s"finished station: $key\n------------------------")
+    // The caller's active session is restored on return.
+    ColumnBridge.withActive(spark) {
+      val obs = Observation()
+      val incoming = stations
+        .withColumn("__hash", md5(col(jsonCol)))
+        .observe(obs, count(lit(1)).as("locations"))
+      val rpath = resolvePath(path)
+      val changed =
+        if (force || !pathExists(spark, rpath)) incoming
+        else {
+          // skinny build side (key + md5 only) but NO broadcast hint: let
+          // AQE pick broadcast vs shuffled-hash from the runtime size —
+          // see the scale note in the object scaladoc.  Under VERBOSE the
+          // previous rendered JSON rides along so the console diff can
+          // show the from-side without a second snapshot read.
+          val prevCols = col(keyCol).as("__k") +:
+            md5(col(jsonCol)).as("__prev_hash") +:
+            (if (verbose) Seq(col(jsonCol).as("__prev_json")) else Nil)
+          val prev = spark.read.parquet(rpath).select(prevCols: _*)
+          incoming.join(prev,
+              incoming(keyCol) === col("__k"), "left")
+            .filter(col("__prev_hash").isNull ||
+              col("__hash") =!= col("__prev_hash"))
+            .drop("__k", "__prev_hash")
         }
+      // materialize + cut lineage BEFORE overwriting the snapshot the
+      // diff was computed against (self-overwrite hazard)
+      val out = changed.drop("__hash").localCheckpoint()
+      val locations = observed(obs).map(_.getLong(0))
+      if (verbose) {
+        // VERBOSE parity (`providers.js:104-118`): per changed station,
+        // an Update block rendering the new and previous documents via
+        // [[prettyPrintStation]].  Console output is driver-side by
+        // nature, so it is bounded (`verboseLimit`) — the reference
+        // prints every station because its batches are per-provider
+        // small; at corpus scale use [[stationFieldDiffs]] for the
+        // data-plane form of the same information.
+        out.select(col(keyCol).cast("string"), col(jsonCol),
+            if (out.columns.contains("__prev_json")) col("__prev_json")
+            else lit(null).cast("string"))
+          .limit(verboseLimit).collect().foreach { r =>
+            val (key, now) = (r.getString(0), r.getString(1))
+            println("-------------------------\nUpdate " + key +
+              "\n----------------------> to:")
+            print(prettyPrintStation(now))
+            if (!r.isNullAt(2)) {
+              println("-----------------> from")
+              print(prettyPrintStation(r.getString(2)))
+            }
+            println(s"finished station: $key\n------------------------")
+          }
+      }
+      val outClean =
+        if (out.columns.contains("__prev_json")) out.drop("__prev_json")
+        else out
+      if (!outClean.isEmpty) {
+        // full refreshed snapshot so the next diff sees current state
+        incoming.drop("__hash").write.mode(SaveMode.Overwrite).parquet(rpath)
+      }
+      (outClean, locations)
     }
-    val outClean =
-      if (out.columns.contains("__prev_json")) out.drop("__prev_json")
-      else out
-    if (!outClean.isEmpty) {
-      // full refreshed snapshot so the next diff sees current state
-      incoming.drop("__hash").write.mode(SaveMode.Overwrite).parquet(rpath)
-    }
-    outClean
-  }
 
   /** VERBOSE parity renderer (`utils.js:146-170` prettyPrintStation):
     * one `key: value` line per top-level field; `sensor_systems`
@@ -257,40 +321,56 @@ object Sinks {
     * per-source batch sizes of 10⁴–10⁵ rows). */
   def writeEnvelopeJson(measures: DataFrame, locations: DataFrame,
                         source: String, path: String,
-                        singleDocument: Boolean = false): Boolean = {
-    val m = measures.withColumn("timestamp",
+                        singleDocument: Boolean = false): Boolean =
+    writeEnvelopeJsonObserved(measures, locations, source, path,
+      singleDocument)._1
+
+  /** [[writeEnvelopeJson]] that also returns the K5 values observed on
+    * its write: the (measures, from, to) row of the measures side,
+    * taken before the timestamp renders as text, and the count of the
+    * locations side.  Nothing is observed when K7 skips the write. */
+  private[graft] def writeEnvelopeJsonObserved(measures: DataFrame,
+      locations: DataFrame, source: String, path: String,
+      singleDocument: Boolean = false): (Boolean, Observed) = {
+    val (mObs, lObs) = (Observation(), Observation())
+    val m = observeStats(measures, mObs).withColumn("timestamp",
       date_format(col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss'Z'"))
     val mCols = m.columns.map(col)
-    val locAgg = locations.agg(
-      collect_list(struct(locations.columns.map(col): _*)).as("locations"))
+    val locAgg = locations.observe(lObs, count(lit(1)).as("locations"))
+      .agg(collect_list(struct(locations.columns.map(col): _*)).as("locations"))
     val meta = struct(lit("v0.1").as("schema"), lit(source).as("source"),
       lit("ingest-id").as("matching_method")).as("meta")
-    if (singleDocument) {
-      if (m.isEmpty && locations.isEmpty) false // K7
-      else {
-        val envelope = m.agg(collect_list(struct(mCols: _*)).as("measures"))
-          .crossJoin(locAgg)
-          .select(to_json(struct(meta, col("measures"), col("locations")))
-            .as("value"))
-        envelope.write.mode(SaveMode.Overwrite)
-          .option("compression", "gzip").text(resolvePath(path))
-        true
-      }
-    } else {
-      val rpath = resolvePath(path)
-      val obs = org.apache.spark.sql.Observation()
-      m.withColumn("day", substring(col("timestamp"), 1, 10))
-        .groupBy(col("day"))
-        .agg(collect_list(struct(mCols: _*)).as("measures"))
-        .crossJoin(locAgg)
-        .select(lit(source).as("provider"), col("day"),
-          to_json(struct(meta, col("measures"), col("locations"))).as("value"))
-        .observe(obs, count(lit(1)).as("n"))
-        .write.partitionBy("provider", "day").mode(SaveMode.Overwrite)
-        .option("compression", "gzip").text(rpath)
-      val n = obs.get("n").asInstanceOf[Long]
-      if (n == 0) deleteQuiet(measures.sparkSession, rpath) // K7
-      n > 0
+    val rpath = resolvePath(path)
+    // the K7 probe reads the unobserved inputs: a `limit` over an
+    // observed frame would complete its Observation with partial counts
+    if (singleDocument && measures.isEmpty && locations.isEmpty)
+      (false, Observed()) // K7
+    else {
+      val envelopes =
+        if (singleDocument)
+          m.agg(collect_list(struct(mCols: _*)).as("measures"))
+            .crossJoin(locAgg)
+            .select(to_json(struct(meta, col("measures"), col("locations")))
+              .as("value"))
+            .write
+        else
+          m.withColumn("day", substring(col("timestamp"), 1, 10))
+            .groupBy(col("day"))
+            .agg(collect_list(struct(mCols: _*)).as("measures"))
+            .crossJoin(locAgg)
+            .select(lit(source).as("provider"), col("day"),
+              to_json(struct(meta, col("measures"), col("locations")))
+                .as("value"))
+            .write.partitionBy("provider", "day")
+      envelopes.mode(SaveMode.Overwrite).option("compression", "gzip")
+        .text(rpath)
+      val seen = Observed(observed(lObs).map(_.getLong(0)), observed(mObs))
+      // the per-day layout writes one envelope per measured day, so it
+      // wrote nothing iff the batch has no measures
+      val written = singleDocument ||
+        seen.measures.fold(measures.count())(_.getLong(0)) > 0
+      if (!written) deleteQuiet(measures.sparkSession, rpath) // K7
+      (written, seen)
     }
   }
 
@@ -321,13 +401,28 @@ object Sinks {
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
 
-  /** K5 — run-summary callback boundary (SNS in the reference); here a
-    * one-row DataFrame handed to the caller (`providers.js:59-71`). */
+  /** K5 — run-summary callback boundary (SNS in the reference): a
+    * one-row frame (`providers.js:59-71`), recomputed from `measures`.
+    * It defines the summary's shape; [[summarizeObserved]] runs it only
+    * as the fallback for a metric Spark pruned. */
   def summarize(source: String, locations: Long, measures: DataFrame): DataFrame =
-    measures.agg(
-      lit(source).as("source_name"),
-      lit(locations).as("locations"),
-      count(lit(1)).as("measures"),
-      min(col("timestamp")).as("from"),
-      max(col("timestamp")).as("to"))
+    measures.agg(lit(source).as("source_name"),
+      lit(locations).as("locations") +: measureStats: _*)
+
+  /** K5 from what the sinks observed: a materialized one-row local frame
+    * with [[summarize]]'s columns and values, so collecting it runs no
+    * Spark job.  A value the sinks could not observe is computed from
+    * the batch — `stations.count()` for `locations`, the [[summarize]]
+    * aggregate for the rest — which happens only on K7-style empty
+    * batches, whose observed nodes Spark may prune. */
+  def summarizeObserved(source: String, seen: Observed, stations: DataFrame,
+                        measures: DataFrame): DataFrame = {
+    val locations = seen.locations.getOrElse(stations.count())
+    val shape = summarize(source, locations, measures)
+    val stats = seen.measures.getOrElse(
+      shape.select("measures", "from", "to").head())
+    measures.sparkSession.createDataFrame(
+      java.util.List.of(Row.fromSeq(Seq(source, locations) ++ stats.toSeq)),
+      shape.schema)
+  }
 }

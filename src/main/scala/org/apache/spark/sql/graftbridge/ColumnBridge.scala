@@ -32,6 +32,12 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Run `body` with `spark` as the calling thread's active session and
+    * restore the previous one afterwards (`SparkSession.withActive` is
+    * `private[sql]`). */
+  def withActive[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T =
+    spark.withActive(body)
+
   /** The RDD ids a checkpointed/cached DataFrame itself pins (the
     * `LogicalRDD` that `localCheckpoint()` leaves in the analyzed
     * plan).  Lets a caller unpersist exactly the blocks it created —

@@ -2,9 +2,10 @@ package graft
 
 import graft.measurand.Measurands
 import graft.model.MeasurandRule
-import graft.pipeline.{ClarityPipeline, Pipelines, PurpleAirPipeline}
+import graft.pipeline.{ClarityPipeline, HawanamaPipeline, Pipelines, PurpleAirPipeline}
 import graft.sinks.Sinks
 import graft.transform.Transform
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 class PipelinesSpec extends SparkSpec {
@@ -15,6 +16,13 @@ class PipelinesSpec extends SparkSpec {
       Measurands.supported(spark,
         Seq(MeasurandRule("x", "not_a_parameter", "ppb")))
     }
+  }
+
+  test("J2 supported-measurand dimension is built with no Spark job") {
+    val (dim, jobs) = jobsDuring(
+      Measurands.supported(spark, PurpleAirPipeline.lookup))
+    assert(jobs == 0, s"$jobs Spark jobs")
+    assert(dim.collect().toSeq == PurpleAirPipeline.lookup)
   }
 
   test("purpleair pipeline: pivot, melt, measurand join, normalize, ids") {
@@ -67,6 +75,20 @@ class PipelinesSpec extends SparkSpec {
     assert(forced.count() == 2)
   }
 
+  test("K1 diff-write restores the caller's active session") {
+    val out = java.nio.file.Files.createTempDirectory("graft_k1s_").toString
+    val st = Transform.stationJson(
+      PurpleAirPipeline.run(spark, fixture("purpleair.json")).stations)
+    val other = spark.newSession()
+    SparkSession.setActiveSession(other)
+    try {
+      Sinks.diffWriteStations(spark, st, "sensor_node_id", "json",
+        s"$out/stations")
+      assert(SparkSession.getActiveSession.contains(other),
+        "diffWriteStations left its own session active on the caller's thread")
+    } finally SparkSession.setActiveSession(spark)
+  }
+
   test("K2 measures CSV sink: header contract, gzip, ISO timestamps") {
     val out = java.nio.file.Files.createTempDirectory("graft_k2_").toString
     val batch = PurpleAirPipeline.run(spark, fixture("purpleair.json"))
@@ -110,6 +132,43 @@ class PipelinesSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Pipelines.processor(spark, "nope", fixture("purpleair.json"), out)
     }
+  }
+
+  test("K5/K7 empty batches: true locations, zero measures, null bounds, " +
+    "in both sink styles") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val out = java.nio.file.Files.createTempDirectory("graft_k5e_").toString
+    def k5(p: Pipelines.ProviderPipeline, b: Pipelines.Batch): Row = {
+      // bounded: an Observation that never completes must not hang K5
+      val summary = Await.result(
+        Future(Pipelines.sinkBatch(spark, p, b, "", out)), 2.minutes)
+      val (rows, jobs) = jobsDuring(summary.collect())
+      assert(jobs == 0, s"${p.name}: collecting the summary ran $jobs jobs")
+      assert(rows.length == 1)
+      rows.head
+    }
+    // measures the optimizer proves empty (Spark prunes observed nodes
+    // next to them), and stations and measures empty only at run time
+    def noMeasures(b: Pipelines.Batch) =
+      b.copy(measures = b.measures.filter(lit(false)))
+    def empty(b: Pipelines.Batch, key: String) = Pipelines.Batch(
+      b.stations.filter(col(key).isNull),
+      b.measures.filter(col("timestamp").isNull))
+    val pa = PurpleAirPipeline.run(spark, fixture("purpleair.json"))
+    assert(k5(PurpleAirPipeline, noMeasures(pa)) ==
+      Row("purpleair", 2L, 0L, null, null))
+    assert(k5(PurpleAirPipeline, empty(pa, "sensor_node_id")) ==
+      Row("purpleair", 0L, 0L, null, null))
+    val haw = HawanamaPipeline.run(spark, fixture("hawanama.json"))
+    assert(k5(HawanamaPipeline, noMeasures(haw)) ==
+      Row("hawanama", 3L, 0L, null, null))
+    assert(k5(HawanamaPipeline, empty(haw, "location")) ==
+      Row("hawanama", 0L, 0L, null, null))
+    // K7: no measures, no measures object
+    assert(!new java.io.File(s"$out/measures/purpleair").exists())
+    assert(!new java.io.File(s"$out/measures-json/hawanama").exists())
   }
 
   test("K4 dry-run redirects every sink under the inspection dir") {

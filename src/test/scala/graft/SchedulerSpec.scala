@@ -117,6 +117,57 @@ class SchedulerSpec extends SparkSpec {
     assert(errored.contains("habitatmap"), "timeout hits the error topic")
   }
 
+  test("tick timeout cancels the stragglers' Spark jobs, in and outside " +
+    "SQL executions") {
+    import scala.concurrent.duration._
+    val out = java.nio.file.Files.createTempDirectory("graft_cancel_").toString
+    val sc = spark.sparkContext
+    val stragglers = Seq("habitatmap", "purpleair")
+    // job id -> provider whose tag it carries
+    val tagged = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val tags = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags"))).getOrElse("")
+          .split(",")
+        stragglers.find(p => tags.exists(_.endsWith(Scheduler.providerTag(p))))
+          .foreach(tagged.put(j.jobId, _))
+      }
+    }
+    // about 1000 s of 1 ms rows per task; both scans check for a kill
+    // per row or per batch
+    val slow = udf { (x: Long) => Thread.sleep(1); x }
+    sc.addSparkListener(l)
+    try {
+      val results = Scheduler.runDue(spark, configDir, "hour",
+        stragglers.map(p => p -> fixture(s"$p.json")).toMap, out,
+        parallelism = 2,
+        process = (s, p, _, _) => {
+          if (p == "habitatmap") // a SQL execution
+            s.range(0, 2000000, 1, 2).select(sum(slow(col("id")))).collect()
+          else // an RDD action, like schema inference: no SQL execution
+            s.sparkContext.parallelize(0 until 2000000, 2)
+              .map { x => Thread.sleep(1); x }.count()
+          null
+        },
+        tickTimeout = 5.seconds)
+      assert(results.forall(_.error.exists(_.contains("tick timeout"))),
+        results)
+      org.apache.spark.graftbridge.BusDrain.await(sc)
+      import scala.jdk.CollectionConverters._
+      assert(tagged.values.asScala.toSet == stragglers.toSet,
+        s"jobs carrying a provider tag: $tagged")
+      def stillActive = sc.statusTracker.getActiveJobIds().toSet
+        .filter(tagged.containsKey)
+      val deadline = System.nanoTime() + 5.seconds.toNanos
+      while (stillActive.nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      assert(stillActive.isEmpty,
+        s"tagged jobs $stillActive still active after the tick timed out")
+    } finally sc.removeSparkListener(l)
+  }
+
   test("minute tick runs clarity alone (frequency classes)") {
     val out = java.nio.file.Files.createTempDirectory("graft_sched2_").toString
     val results = Scheduler.runDue(spark, configDir, "minute",

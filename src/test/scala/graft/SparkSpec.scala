@@ -46,6 +46,26 @@ trait SparkSpec extends AnyFunSuite {
 
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
+
+  /** `body`'s result and the number of Spark jobs it started, counted
+    * once the listener bus has delivered their events. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.graftbridge.BusDrain.await(sc) // earlier jobs don't count
+    sc.addSparkListener(l)
+    try {
+      val r = body
+      org.apache.spark.graftbridge.BusDrain.await(sc)
+      (r, jobs.get())
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

@@ -106,15 +106,49 @@ class V01Providers2Spec extends SparkSpec {
     assert(new java.io.File(s"$out/measures-json/hawanama").exists())
   }
 
+  /** K5 of every recorded fixture through the processor — locations,
+    * measures, from, to (`perfbench/scaler.py`'s FIXTURE_K5). */
+  private val fixtureK5 = Map(
+    "aernode" -> (1L, 6L, "2024-04-30T10:00:00Z", "2024-04-30T12:00:00Z"),
+    "airgradient" -> (1L, 8L, "2024-04-30T10:00:00Z", "2024-04-30T12:00:00Z"),
+    "airqo" -> (2L, 3L, "2024-04-30T10:00:00Z", "2024-04-30T10:00:00Z"),
+    "airqoon" -> (2L, 1L, "2024-04-30T10:00:00Z", "2024-04-30T10:00:00Z"),
+    "clarity" -> (2L, 2L, "2026-08-12T10:00:00Z", "2026-08-12T10:05:00Z"),
+    "cmu" -> (3L, 33L, "2020-07-17T15:30:00Z", "2020-07-17T15:45:00Z"),
+    "cpcb" -> (1L, 2L, "2024-04-30T10:00:00Z", "2024-04-30T11:00:00Z"),
+    "data354" -> (1L, 3L, "2024-04-30T11:00:00Z", "2024-04-30T12:00:00Z"),
+    "habitatmap" -> (4L, 1L, "2024-04-30T10:00:00Z", "2024-04-30T10:00:00Z"),
+    "hawanama" -> (3L, 3L, "2026-08-12T10:00:00Z", "2026-08-12T11:00:00Z"),
+    "iqair" -> (1L, 12L, "2024-04-30T01:00:00Z", "2024-04-30T12:00:00Z"),
+    "lovemyair" -> (2L, 4L, "2024-04-30T09:00:00Z", "2024-04-30T11:00:00Z"),
+    "miri" -> (2L, 7L, "2024-04-30T09:00:00Z", "2024-04-30T11:00:00Z"),
+    "purpleair" -> (2L, 26L, "2024-04-30T18:00:00Z", "2024-04-30T18:01:00Z"),
+    "senstate" -> (1L, 2L, "2024-04-30T10:00:00Z", "2024-04-30T10:00:00Z"),
+    "smartsense" -> (1L, 2L, "2024-04-30T10:00:00Z", "2024-04-30T12:00:00Z"))
+
+  private def fixtureInput(provider: String): String = provider match {
+    case "cmu" => fixture("cmu").stripSuffix("/") + "/*.csv"
+    case "cpcb" => fixture("cpcb")
+    case "iqair" => fixture("iqair.csv")
+    case p => fixture(s"$p.json")
+  }
+
   test("full registry: 16/16 providers dispatch through the processor") {
     assert(Pipelines.registry.size == 16) // all 16 reference providers
+    assert(fixtureK5.keySet == Pipelines.registry.keySet)
     val out = java.nio.file.Files.createTempDirectory("graft_all_").toString
-    for ((p, fx) <- Seq("airqo" -> "airqo.json", "airqoon" -> "airqoon.json",
-      "data354" -> "data354.json", "miri" -> "miri.json",
-      "senstate" -> "senstate.json", "cpcb" -> "cpcb",
-      "hawanama" -> "hawanama.json")) {
-      val s = Pipelines.processor(spark, p, fixture(fx), out).first()
-      assert(s.getLong(2) > 0, s"$p measures")
+    for (p <- Pipelines.registry.keys.toSeq.sorted) {
+      val summary = Pipelines.processor(spark, p, fixtureInput(p), out)
+      val (rows, jobs) = jobsDuring(summary.collect())
+      assert(jobs == 0, s"$p: collecting the K5 summary ran $jobs Spark jobs")
+      // the summary the sinks observed equals the old recomputed aggregate
+      val b = Pipelines.registry(p).run(spark, fixtureInput(p))
+      val old = graft.sinks.Sinks.summarize(p, b.stations.count(), b.measures)
+      assert(summary.schema == old.schema, p)
+      assert(rows.toSeq == old.collect().toSeq, p)
+      val r = rows.head
+      assert((r.getLong(1), r.getLong(2), r.getTimestamp(3).toInstant.toString,
+        r.getTimestamp(4).toInstant.toString) == fixtureK5(p), p)
     }
   }
 }
