@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.{Json, LocalSession, StageProbe, StageRec}
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
@@ -109,16 +109,14 @@ import java.nio.file.{Files, Paths}
   * dropped them).  Stages are therefore bucketed to runs by their
   * SUBMISSION TIME against each run's wall-clock window, the event
   * queue is cleared once per QUERY (not per run), and the snapshot
-  * waits for the bus to quiesce (queue size stable for 100 ms, capped
-  * at 2 s) — a late event can no longer be dropped or billed to the
-  * wrong run.  Stage names resolve to the first `graft.` frame of the
-  * stage's call-site details (the raw `name` field is usually the
-  * useless `$anonfun$withThreadLocalCaptured$2` lambda).
+  * waits for the listener bus to drain — a late event can no longer be
+  * dropped or billed to the wrong run.  Stage names resolve to the
+  * first `graft.` frame of the stage's call-site details (see
+  * `StageProbe`).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     // Prior committed artifact for the regression self-gate: read BEFORE
@@ -179,14 +177,7 @@ object Bench {
     def bestRef(name: String): Option[Double] =
       (priorBest.get(name).toSeq ++ priorMins.get(name).toSeq)
         .reduceOption(_ min _)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession.session(LocalSession.envCores, "ERROR")
     // Local-iteration hooks (driver leaves both unset):
     // SPARK_GRAFT_BENCH_ONLY=x2,x16 times only matching queries;
     // SPARK_GRAFT_CONF=k=v,k=v sets session confs under the bench's own
@@ -214,42 +205,11 @@ object Bench {
     // attributed from data captured DURING the bad run (stage skew? GC?
     // driver-side gap?), never re-derived afterwards on a box that may
     // no longer misbehave.
-    case class StageRec(ms: Long, tasks: Int, gcMs: Long, name: String,
-                        submitMs: Long)
     case class RunProf(wall: Double, stages: Seq[StageRec]) {
       def gcMs: Long = stages.map(_.gcMs).sum
       def stageMs: Long = stages.map(_.ms).sum
     }
-    val liveStages =
-      new java.util.concurrent.ConcurrentLinkedQueue[StageRec]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val i = s.stageInfo
-        val ms = (for (a <- i.completionTime; b <- i.submissionTime)
-          yield a - b).getOrElse(-1L)
-        // the raw stage name is the call-site's innermost frame — for
-        // SQL-executed stages that is an anonymous Spark lambda; the
-        // first graft. frame in `details` names the operator instead
-        val name = i.details.linesIterator
-          .find(l => l.contains("graft.") && !l.contains("graft.Bench"))
-          .map(_.trim.stripPrefix("at "))
-          .getOrElse(i.name.split(" at ").head)
-        liveStages.add(StageRec(ms, i.numTasks, i.taskMetrics.jvmGCTime,
-          name, i.submissionTime.getOrElse(-1L)))
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    // wait until no new stage event has arrived for 100 ms (cap 2 s):
-    // listener delivery is async and a run's tail events would
-    // otherwise be dropped or misattributed (round-15 ADVICE)
-    def quiesce(): Unit = {
-      val deadline = System.nanoTime() + 2000L * 1000000L
-      var last = -1
-      var stable = liveStages.size
-      while (System.nanoTime() < deadline && { last = stable
-        Thread.sleep(100); stable = liveStages.size; stable != last }) ()
-    }
+    val probe = StageProbe.attach(spark.sparkContext)
     val spreadProfiles =
       scala.collection.mutable.LinkedHashMap.empty[String, RunProf]
     val regressProfiles =
@@ -365,7 +325,7 @@ object Bench {
         // are bucketed to runs by submission time, so the untimed
         // warmup's stages (cold JIT/codegen) fall outside every timed
         // window and can never masquerade as a timed run's evidence
-        liveStages.clear()
+        probe.clear()
         val warm = once(timed = false)
         var times =
           if (warm.isEmpty) Seq.empty[Double]
@@ -422,11 +382,9 @@ object Bench {
         else {
           if (spreadBad || regressBad) {
             // gate survived the reruns → ship stage evidence captured
-            // DURING the offending runs.  Drain after a quiesce so the
-            // async bus cannot drop tail events (round-15 ADVICE).
-            quiesce()
-            import scala.jdk.CollectionConverters._
-            val evs = liveStages.asScala.toSeq
+            // DURING the offending runs.  Drain the async bus first so
+            // it cannot drop tail events (round-15 ADVICE).
+            val evs = probe.drain()
             def prof(win: (Double, Long, Long)): RunProf =
               RunProf(win._1, evs.filter(s =>
                 s.submitMs >= win._2 && s.submitMs <= win._3))
@@ -468,21 +426,13 @@ object Bench {
     val failedJson =
       if (failed.isEmpty) ""
       else failed.map("\"" + _ + "\"").mkString(""","failed":[""", ",", "]")
-    // stage names are code locations but not under our control —
-    // escape them or one odd character invalidates the artifact
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     // top-5 stages by wall, total GC, and the driver-side gap (wall −
     // sum of stage wall): enough to tell a skewed/GC-bound stage from
     // scheduler/driver interference.  FILE artifact only (the stdout
     // tail capture drops long-line heads).
     def profBody(p: RunProf, wallKey: String, extraKv: String): String = {
       val top = p.stages.sortBy(-_.ms).take(5).map(s =>
-        s"""[${s.ms},${s.tasks},${s.gcMs},"${esc(s.name)}"]""")
+        s"""[${s.ms},${s.tasks},${s.gcMs},${Json.quote(s.name)}]""")
         .mkString("[", ",", "]")
       s"""{"$wallKey":${msBd(p.wall)},$extraKv"gc_ms":${p.gcMs},""" +
         s""""stage_ms":${p.stageMs},"stages":$top}"""

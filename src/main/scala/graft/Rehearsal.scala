@@ -1,4 +1,5 @@
 package graft
+import graft.tools.{Json, LocalSession}
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.Locale
@@ -159,28 +160,13 @@ object Rehearsal {
       .getOrElse(defaultQueries)
     val history =
       sys.env.getOrElse("SPARK_GRAFT_REHEARSAL_HISTORY", "0").toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // 32 cores: the committed REHEARSAL.json is recorded there
+    val spark = LocalSession.session(32, "ERROR")
 
     // Session-history warm-up: replay the suite ONCE before any gated
-    // measurement (same slate-v2 semantics as the bench — pinned
-    // blocks cleared between queries, JVM residue kept).  A query that
-    // fails on the rehearsal corpus (e.g. a fixture-lattice query the
-    // generated tables don't carry) is skipped — history is load, not
-    // a correctness pass.
-    if (history > 0) {
-      val names = SparkEntry.queries.keys.toSeq.sorted.take(history)
-      names.foreach { name =>
-        graft.queries.ExtQueries.clearSessionSlate(spark)
-        try SparkEntry.queries(name)(spark, args(0)).count()
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-      println(s"[rehearsal] ran ${names.size} history queries")
-    }
+    // measurement (same slate-v2 semantics as the bench).
+    if (history > 0) println(s"[rehearsal] ran " +
+      s"${LocalSession.replayHistory(spark, baseDir, history)} history queries")
 
     // Queries whose declared form pins its whole result in a session
     // cache would rehearse the CACHE, not the operator — time those
@@ -263,20 +249,10 @@ object Rehearsal {
 
     // Locale.ROOT formatting: the f-interpolator uses the JVM default
     // locale, so under a comma-decimal locale "%.3f" would emit `1,234`
-    // and corrupt the JSON artifact.  Dir strings go through the same
-    // escape as Verify.scala's oracle dump — a quote or backslash in a
-    // path must not break the committed file.
+    // and corrupt the JSON artifact.  Dir strings are escaped: a quote
+    // or backslash in a path must not break the committed file.
     def n(v: Double, digits: Int = 3): String =
       String.format(Locale.ROOT, s"%.${digits}f", Double.box(v))
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val rows = queries.map { name =>
       val cBase = canary()
       val base = time(name, baseDir)
@@ -301,7 +277,7 @@ object Rehearsal {
     }
     val json =
       s"""{
-         |  "base_dir": ${q(baseDir)}, "big_dir": ${q(bigDir)},
+         |  "base_dir": ${Json.quote(baseDir)}, "big_dir": ${Json.quote(bigDir)},
          |  "scale": ${n(scale, 2)}, "runs_per_point": $runs,
          |  "history": $history,
          |  "canary_min_sec": ${n(cMin)},

@@ -1,20 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.{Json, LocalSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession.session(LocalSession.envCores, "WARN")
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter: SPARK_GRAFT_VERIFY_ONLY=x2,x16 dumps only
     // matching queries (prefix match).  Unset (driver) = everything.
@@ -32,20 +24,9 @@ object Verify {
         failed(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // A query that throws must leave a trace in the artifact dir, not just
     // stderr — otherwise the correctness artifact silently shrinks and a
@@ -53,7 +34,8 @@ object Verify {
     // query name → first exception line; ran/failed counts let any
     // consumer cross-check against the declared query map.
     val errJson = failed.map { case (k, v) =>
-      s"${q(k)}: ${q(v.linesIterator.take(1).mkString.take(500))}"
+      val line = v.linesIterator.take(1).mkString.take(500)
+      s"${Json.quote(k)}: ${Json.quote(line)}"
     }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     println(s"[verify] declared=${SparkEntry.queries.size} selected=${run.size} " +

@@ -1,9 +1,8 @@
 package graft.tools
 
-/** `key=value` session-conf entries for the dev mains: `Bench`,
-  * `ExplainQ` and `TimeQ` read them from the `SPARK_GRAFT_CONF` env var
-  * (comma-separated, so values must not contain commas);
-  * `RepeatProfile` takes them as trailing arguments. */
+/** `key=value` session-conf entries: `Bench` and `Dev` read them from
+  * the `SPARK_GRAFT_CONF` env var (comma-separated, so values must not
+  * contain commas). */
 object DevConf {
 
   /** Splits each entry at its first `=`; an entry without one fails

@@ -1,10 +1,10 @@
 package graft.tools
 import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
-/** Physical-plan anti-pattern audit over every declared query, plus a
-  * plan-dump main for review.  The audit is ALSO a failing test
-  * (PlanAuditSpec): an unbounded join introduced into any declared
-  * query turns CI red instead of waiting for a plan review. */
+/** Physical-plan anti-pattern audit over every declared query.  The
+  * audit runs as a failing test (PlanAuditSpec): an unbounded join
+  * introduced into any declared query turns CI red instead of waiting
+  * for a plan review; `Dev explain` dumps one query's plan. */
 object Plans {
 
   /** Queries whose AQE-off physical plan legitimately contains a
@@ -70,28 +70,5 @@ object Plans {
         name -> hits
       }.filter(_._2.nonEmpty)
     } finally spark.conf.set("spark.sql.adaptive.enabled", before)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the custom planner strategy (TopKPerKey) must be injected or
-      // its logical node is unplannable in the sweep
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val d = "/root/testdata/sf0.001"
-    if (args.headOption.contains("audit")) {
-      for ((name, hits) <- audit(spark, d).toSeq.sortBy(_._1); h <- hits)
-        println(s"AUDIT $name: $h")
-      spark.stop()
-      return
-    }
-    for (q <- args) {
-      println(s"===== $q =====")
-      SparkEntry.queries(q)(spark, d).explain("formatted")
-    }
-    spark.stop()
   }
 }

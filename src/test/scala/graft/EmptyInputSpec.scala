@@ -10,8 +10,23 @@ package graft
   * return zero rows. */
 class EmptyInputSpec extends SparkSpec {
 
+  /** Write zero-row copies of every input table (schemas preserved;
+    * events stays RAW nanos longs — Tables.events floors ts DIV 1000
+    * on read, so a pre-floored TIMESTAMP would re-divide) and return
+    * the staged dir. */
+  private def stageEmpty(src: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_empty_").toString
+    for (t <- Seq("region", "nation", "customer", "supplier", "part",
+      "orders", "lineitem", "events", "documents", "embeddings")) {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      spark.read.parquet(s"$src/$t.parquet")
+        .limit(0).write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    }
+    dir
+  }
+
   test("every declared query survives empty input tables") {
-    val dir = graft.tools.EmptyCheck.stageEmpty(spark, sf0001)
+    val dir = stageEmpty(sf0001)
     val globalAggSingletons = Set(
       "a1_batch_from_to", "a3_watermark_max", "a7_count_compare",
       "k3_envelope", "x68_source_concentration", "x97_model_eval")

@@ -2416,23 +2416,14 @@ class BpeSpec extends SparkSpec {
   test("bpeTrainLocal trains 64 merges from the documents table in " +
     "<= 8 Spark jobs; the collect cap is enforced") {
     val docs = Tables.documents(spark, sf0001)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    val got = try {
+    val (got, jobs) = jobsDuring {
       val df = graft.ext.Bpe.bpeTrainLocal(docs, "text", merges = 64)
-      val rows = df.collect() // LocalRelation result: no corpus job
-      Thread.sleep(500)
-      rows
-    } finally spark.sparkContext.removeSparkListener(l)
+      df.collect() // LocalRelation result: no corpus job
+    }
     assert(got.length == 64, s"expected 64 merges, got ${got.length}")
-    assert(jobs.get() <= 8,
+    assert(jobs <= 8,
       s"driver-side training must not iterate Spark jobs per merge " +
-        s"round: ${jobs.get()} jobs for 64 merges")
+        s"round: $jobs jobs for 64 merges")
     val ex = intercept[IllegalArgumentException] {
       graft.ext.Bpe.bpeTrainLocal(docs, "text", merges = 4,
         maxCollectWords = 10)

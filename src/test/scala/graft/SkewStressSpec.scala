@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graftbridge.BusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
@@ -18,7 +19,7 @@ class SkewStressSpec extends SparkSpec {
   import spark.implicits._
 
   /** Run `body`, return stageId → per-task shuffle (write, read) record
-    * counts, polling until the listener bus has drained. */
+    * counts once the listener bus has drained. */
   private def perTaskRecords(body: => Unit): Map[Int, Seq[(Long, Long)]] = {
     val recs =
       new java.util.concurrent.ConcurrentLinkedQueue[(Int, (Long, Long))]()
@@ -33,12 +34,7 @@ class SkewStressSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try {
       body
-      var last = -1
-      var stable = 0
-      while (stable < 2) { // listener events arrive async — settle
-        Thread.sleep(250)
-        if (recs.size == last) stable += 1 else { stable = 0; last = recs.size }
-      }
+      BusDrain.await(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
     import scala.jdk.CollectionConverters._
     recs.asScala.toSeq.groupBy(_._1).map { case (s, xs) => s -> xs.map(_._2) }

@@ -1,5 +1,9 @@
 package graft
 
+import java.lang.management.ManagementFactory
+import scala.jdk.CollectionConverters._
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,7 +25,8 @@ trait SparkSpec extends AnyFunSuite {
   override def withFixture(test: NoArgTest): org.scalatest.Outcome = {
     assert(!spark.sparkContext.isStopped,
       "shared test SparkContext was stopped by an earlier suite/test — " +
-        "every later plan would capture a null session (K1-class NPE)")
+        "every later plan would capture a null session (K1-class NPE)\n" +
+        SparkSpec.stopRecord.getOrElse("no application-end record"))
     SparkSession.setActiveSession(spark)
     SparkSession.setDefaultSession(spark)
     super.withFixture(test)
@@ -69,6 +74,45 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  private var watching = false
+  @volatile private var record: Option[String] = None
+
+  /** What the shared context's application-end event saw, once it has
+    * been stopped: wall time, heap, and the thread inside
+    * `SparkContext.stop` with the frames that called it. */
+  def stopRecord: Option[String] = record
+
+  /** Once per JVM: on application end, record and print to stderr who
+    * stopped the context.  The bus delivers the event while the stopping
+    * thread still waits inside `stop()` for the bus to drain. */
+  private def watchStop(sc: SparkContext): Unit = synchronized {
+    if (!watching) {
+      watching = true
+      sc.addSparkListener(new SparkListener {
+        override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
+          def isStop(f: StackTraceElement) =
+            f.getClassName == "org.apache.spark.SparkContext" &&
+              f.getMethodName == "stop"
+          val stopper = Thread.getAllStackTraces.asScala
+            .find(_._2.exists(isStop))
+          val rt = Runtime.getRuntime
+          val mb = 1L << 20
+          val r = s"[graft-test] SparkContext stopped at " +
+            s"${java.time.Instant.ofEpochMilli(e.time)}, JVM uptime " +
+            s"${ManagementFactory.getRuntimeMXBean.getUptime / 1000} s, " +
+            s"heap ${(rt.totalMemory - rt.freeMemory) / mb} MB used of " +
+            s"${rt.maxMemory / mb} MB max, stopped by thread " +
+            stopper.fold("<none found in SparkContext.stop>") {
+              case (t, st) => s"'${t.getName}'" + st.dropWhile(!isStop(_))
+                .take(25).map("\n    at " + _).mkString
+            }
+          record = Some(r)
+          System.err.println(r)
+        }
+      })
+    }
+  }
+
   /** Build-or-reuse the shared session AND pin it as the calling
     * thread's active session (getOrCreate only sets the thread-local
     * on the thread that calls it; suite bodies and test runners are
@@ -85,6 +129,7 @@ object SparkSpec {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     SparkSession.setActiveSession(s)
+    watchStop(s.sparkContext)
     s
   }
 }
