@@ -37,6 +37,17 @@ object ColumnFns {
       case chain => coalesce(chain, unit)
     }
 
+  /** `round(x, digits)` of a double the way DuckDB and C's `round`
+    * compute it: half away from zero on the binary product x·10^digits,
+    * so a mean of 79.695 (stored as 79.69499…) rounds to 79.69.  Spark's
+    * `round` on a double rounds the shortest decimal rendering instead
+    * and gives 79.70.  The scale-0 `round` of the product agrees with C
+    * because a double below k + ½ never renders as k.5 or above. */
+  def roundBinary(x: Column, digits: Int): Column = {
+    val scale = math.pow(10, digits)
+    round(x * scale, 0) / scale
+  }
+
   /** F2/F3 — id synthesis `"{source}-{node}-{parameter}"`
     * (`purpleair.js:63`, `cmu.js:309-311`, `clarity.js:96-98`). */
   def synthId(parts: Column*): Column = concat_ws("-", parts: _*)

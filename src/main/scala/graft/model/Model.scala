@@ -123,4 +123,102 @@ object Schemas {
   val fixedCsvHeader: Seq[String] = Seq("sensor_id", "measure", "timestamp")
   val mobileCsvHeader: Seq[String] =
     Seq("sensor_id", "measure", "timestamp", "longitude", "latitude")
+
+  /** Provider payload schemas (SURVEY §2.1; fields as recorded in the
+    * fixtures), read by [[graft.sources.Ingest]] so no scan infers one.
+    * JSON integers are `BIGINT`, fractions `DOUBLE`; a field a provider
+    * sends with mixed types is `STRING` and the pipeline casts it
+    * (PurpleAir's positional rows, SmartSense's sentinels).  A value of
+    * another type, such as Data354's empty strings, reads as null.  CSV
+    * schemas list the header's columns in file order. */
+  object Payload {
+    private def ddl(s: String): StructType = StructType.fromDDL(s)
+
+    /** `purpleair.js:134-143`: `fields[]` names the columns of `data[][]`. */
+    val purpleair: StructType =
+      ddl("fields ARRAY<STRING>, data ARRAY<ARRAY<STRING>>")
+    val clarity: StructType = ddl(
+      "datasources ARRAY<STRUCT<datasourceId: STRING, name: STRING>>, " +
+        "data ARRAY<STRUCT<datasourceId: STRING, metric: STRING, " +
+        "value: DOUBLE, time: STRING, qc: STRING>>, " +
+        "locations ARRAY<STRUCT<datasourceId: STRING, lon: DOUBLE, lat: DOUBLE>>")
+    val habitatmap: StructType = ddl(
+      "fixed STRUCT<sessions: ARRAY<STRUCT<id: BIGINT, title: STRING, " +
+        "latitude: DOUBLE, longitude: DOUBLE, end_time_local: STRING, " +
+        "streams: STRUCT<`AirBeam2-PM2.5`: STRUCT<id: BIGINT, " +
+        "average_value: DOUBLE>>>>>, " +
+        "mobile_pages ARRAY<STRUCT<sessions: ARRAY<STRUCT<id: BIGINT, " +
+        "title: STRING, streams: STRUCT<`AirBeam2-PM2.5`: STRUCT<id: BIGINT>>>>, " +
+        "fetchableSessionsCount: BIGINT>>, " +
+        "measurements ARRAY<STRUCT<stream_id: BIGINT, time: BIGINT, " +
+        "value: DOUBLE, longitude: DOUBLE, latitude: DOUBLE>>")
+    val lovemyair: StructType = ddl(
+      "sites ARRAY<STRUCT<siteId: STRING, siteName: STRING, lon: DOUBLE, " +
+        "lat: DOUBLE, parameters: ARRAY<STRUCT<parameterId: STRING, " +
+        "units: STRING>>>>, " +
+        "measurements ARRAY<STRUCT<parameterId: STRING, value: DOUBLE, " +
+        "postDate: STRING>>")
+    val aernode: StructType = ddl(
+      "devices ARRAY<STRUCT<device_id: STRING, shortname: STRING, " +
+        "lon_set: DOUBLE, lat_set: DOUBLE>>, " +
+        "measurements ARRAY<STRUCT<device_id: STRING, metric_name: STRING, " +
+        "value: DOUBLE, time: STRING>>")
+    val airgradient: StructType = ddl(
+      "devices ARRAY<STRUCT<locationId: STRING, locationName: STRING, " +
+        "longitude: DOUBLE, latitude: DOUBLE>>, " +
+        "measures ARRAY<STRUCT<locationId: STRING, date: STRING, " +
+        "pm02: DOUBLE, atmp: DOUBLE, rhum: DOUBLE>>")
+    val smartsense: StructType = ddl(
+      "devices ARRAY<STRUCT<deviceId: STRING, label: STRING, lon: DOUBLE, " +
+        "lat: DOUBLE>>, " +
+        "measurements ARRAY<STRUCT<deviceId: STRING, value: STRING, time: BIGINT>>")
+    val hawanama: StructType = ddl(
+      "locations ARRAY<STRUCT<location_id: BIGINT, location: STRING, " +
+        "lon: DOUBLE, lat: DOUBLE>>, " +
+        "measurements ARRAY<STRUCT<location_id: BIGINT, parameter: STRING, " +
+        "value: DOUBLE, datetime: STRING>>")
+    val airqo: StructType = ddl(
+      "cohorts ARRAY<STRUCT<measurements: ARRAY<STRUCT<site_id: STRING, " +
+        "device: STRING, time: STRING, " +
+        "deviceDetails: STRUCT<longitude: DOUBLE, latitude: DOUBLE>, " +
+        "pm2_5: STRUCT<value: DOUBLE>, pm10: STRUCT<value: DOUBLE>>>>>")
+    val airqoon: StructType = ddl(
+      "Data ARRAY<STRUCT<Id: STRING, Name: STRING, " +
+        "Location: STRUCT<Longitude: DOUBLE, Latitude: DOUBLE>>>, " +
+        "telemetry ARRAY<STRUCT<deviceId: STRING, statusCode: BIGINT, " +
+        "measurand: STRING, Value: STRING, DateTime: STRING>>")
+    val data354: StructType = ddl(
+      "stations ARRAY<STRUCT<station_id: STRING, station_name: STRING, " +
+        "latitude: DOUBLE, longitude: DOUBLE, deployment_flag: BIGINT, " +
+        "deployment_date: STRING>>, " +
+        "measurements ARRAY<STRUCT<station_id: STRING, timestamp: STRING, " +
+        "PM25: DOUBLE, PM10: DOUBLE>>")
+    val miri: StructType = ddl(
+      "devices ARRAY<STRUCT<device_id: STRING, name: STRING, location: STRING>>, " +
+        "measurements ARRAY<STRUCT<device_id: STRING, date_added: STRING, " +
+        "pm25: DOUBLE, pm10: DOUBLE>>")
+    val senstate: StructType = ddl(
+      "readings ARRAY<STRUCT<statusCode: BIGINT, token: STRING, name: STRING, " +
+        "city: STRING, country: STRING, " +
+        "coordinates: STRUCT<longitude: DOUBLE, latitude: DOUBLE>, " +
+        "measurements: ARRAY<STRUCT<" +
+        "parameters: STRUCT<parameter: STRING, value: DOUBLE>, " +
+        "date: STRUCT<utc: STRING>>>>>")
+
+    /** `iqair.js:66-82` day file. */
+    val iqairCsv: StructType = ddl(
+      "station STRING, datetime TIMESTAMP, `pm25(ug/m3)` DOUBLE, " +
+        "lon DOUBLE, lat DOUBLE")
+    /** `cpcb.js` bucket streams: the station list and the readings. */
+    val cpcbStationsCsv: StructType = ddl(
+      "station_id STRING, station_name STRING, latitude DOUBLE, longitude DOUBLE")
+    val cpcbMeasurementsCsv: StructType = ddl(
+      "station_id STRING, parameter STRING, value DOUBLE, " +
+        "datetime_local TIMESTAMP")
+    /** `cmu.js` `Location_Data <ts>.csv`: `NaN` cells read as NaN. */
+    val cmuCsv: StructType = ddl(
+      "Site_Name STRING, Anon_Name STRING, Lat DOUBLE, Lon DOUBLE, " +
+        "CO DOUBLE, NO DOUBLE, NO2 DOUBLE, O3 DOUBLE, P DOUBLE, " +
+        "PM025 DOUBLE, RH DOUBLE, SO2 DOUBLE, T DOUBLE")
+  }
 }

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.functions.ColumnFns
 import graft.measurand.Measurands
-import graft.model.MeasurandRule
+import graft.model.{MeasurandRule, Schemas}
 import graft.sources.Ingest
 import graft.transform.Transform
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -25,7 +25,7 @@ object HabitatMapPipeline extends Pipelines.ProviderPipeline {
     Seq(MeasurandRule("AirBeam2-PM2.5", "pm25", "µg/m³"))
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
-    val raw = Ingest.readJson(spark, inputPath)
+    val raw = Ingest.readJson(spark, inputPath, Schemas.Payload.habitatmap)
 
     // ---- fixed sessions: one measure per station (average_value) ----
     val fixedSessions = raw.select(explode(col("fixed.sessions")).as("s"))
@@ -128,7 +128,7 @@ object CmuPipeline extends Pipelines.ProviderPipeline {
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
     val dim = Measurands.supported(spark, lookup)
-    val raw = Ingest.readCsv(spark, inputPath)
+    val raw = Ingest.readCsv(spark, inputPath, Schemas.Payload.cmuCsv)
       .withColumn("file", // input_file_name() is URL-encoded (space→%20)
         expr("url_decode(regexp_extract(input_file_name(), '([^/]+)$', 1))"))
       .withColumn("file_ts", fileTimestamp(col("file")))
@@ -167,10 +167,32 @@ object CmuPipeline extends Pipelines.ProviderPipeline {
   }
 
   /** The run's high-water mark — persisted via
-    * [[graft.sinks.Sinks.writeWatermark]] after a successful batch. */
-  def maxFileTimestamp(spark: SparkSession, inputPath: String): java.sql.Timestamp =
-    Ingest.readCsv(spark, inputPath)
-      .withColumn("file", // input_file_name() is URL-encoded (space→%20)
-        expr("url_decode(regexp_extract(input_file_name(), '([^/]+)$', 1))"))
-      .select(max(fileTimestamp(col("file")))).collect()(0).getTimestamp(0)
+    * [[graft.sinks.Sinks.writeWatermark]] after a successful batch: the
+    * newest [[fileTimestamp]] among the input files that hold a data
+    * row (a header-only file adds no row to the batch), or null when
+    * none does.  It comes from the file listing, on the driver, and runs
+    * no Spark job: each file is read only up to its first data line. */
+  def maxFileTimestamp(spark: SparkSession, inputPath: String): java.sql.Timestamp = {
+    import org.apache.hadoop.fs.Path
+    import spark.implicits._
+    val path = new Path(inputPath)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // Spark's CSV reader skips blank lines and takes the first other
+    // line of each file as its header
+    def hasDataRow(file: Path): Boolean = {
+      val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+        fs.open(file), java.nio.charset.StandardCharsets.UTF_8))
+      try Iterator.continually(in.readLine()).takeWhile(_ != null)
+        .filter(_.trim.nonEmpty).drop(1).hasNext
+      finally in.close()
+    }
+    val files = Option(fs.globStatus(path)).toSeq.flatten
+      .flatMap(st => if (st.isDirectory) fs.listStatus(st.getPath).toSeq else Seq(st))
+      .filter(st => st.isFile && !st.getPath.getName.startsWith(".") &&
+        !st.getPath.getName.startsWith("_") && hasDataRow(st.getPath))
+    // a projection of a local relation: evaluated on the driver, no job
+    files.map(_.getPath.getName).toDF("file")
+      .select(fileTimestamp(col("file"))).collect()
+      .flatMap(r => Option(r.getTimestamp(0))).maxByOption(_.getTime).orNull
+  }
 }

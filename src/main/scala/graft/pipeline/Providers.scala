@@ -132,7 +132,7 @@ object PurpleAirPipeline extends Pipelines.ProviderPipeline {
     val dim = Measurands.supported(spark, lookup)
 
     // S2 scan + S9 pivot (fields[] + data[][] → columns)
-    val columnar = Ingest.readJson(spark, inputPath)
+    val columnar = Ingest.readJson(spark, inputPath, Schemas.Payload.purpleair)
       .select(explode(col("data")).as("data"))
     val wide = Ingest.columnarPivot(columnar, fields)
 
@@ -183,7 +183,7 @@ object ClarityPipeline extends Pipelines.ProviderPipeline {
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
     val dim = Measurands.supported(spark, lookup)
-    val raw = Ingest.readJson(spark, inputPath)
+    val raw = Ingest.readJson(spark, inputPath, Schemas.Payload.clarity)
 
     val datasources = raw.select(explode(col("datasources")).as("ds"))
       .select(col("ds.datasourceId").as("datasourceId"),
@@ -221,7 +221,7 @@ object ClarityPipeline extends Pipelines.ProviderPipeline {
 
   /** The missing-datasource anti report (`clarity.js:51-56`). */
   def missingDatasources(spark: SparkSession, inputPath: String): DataFrame = {
-    val raw = Ingest.readJson(spark, inputPath)
+    val raw = Ingest.readJson(spark, inputPath, Schemas.Payload.clarity)
     val datasources = raw.select(explode(col("datasources")).as("ds"))
       .select(col("ds.datasourceId").as("datasourceId"))
     raw.select(explode(col("locations")).as("l"))

@@ -1,6 +1,8 @@
 package graft.pipeline
 
 import graft.functions.ColumnFns
+import graft.model.Schemas
+import graft.sources.Ingest
 import graft.transform.Transform
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,7 +33,7 @@ object LoveMyAirPipeline extends Pipelines.ProviderPipeline {
   override val isV01 = true
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
-    val raw = graft.sources.Ingest.readJson(spark, inputPath)
+    val raw = Ingest.readJson(spark, inputPath, Schemas.Payload.lovemyair)
     val sites = raw.select(explode(col("sites")).as("d"))
       .select(col("d.siteId").as("siteId"), col("d.siteName").as("siteName"),
         col("d.lon").as("lon"), col("d.lat").as("lat"),
@@ -70,7 +72,7 @@ object AernodePipeline extends Pipelines.ProviderPipeline {
   val supportedMetrics = Seq("pm25", "pm10")
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
-    val raw = graft.sources.Ingest.readJson(spark, inputPath)
+    val raw = Ingest.readJson(spark, inputPath, Schemas.Payload.aernode)
     val devices = raw.select(explode(col("devices")).as("d"))
       .select(col("d.device_id").as("device_id"),
         col("d.shortname").as("shortname"),
@@ -105,7 +107,7 @@ object IqAirPipeline extends Pipelines.ProviderPipeline {
   override val isV01 = true
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
-    val raw = graft.sources.Ingest.readCsv(spark, inputPath)
+    val raw = Ingest.readCsv(spark, inputPath, Schemas.Payload.iqairCsv)
       .withColumnRenamed("pm25(ug/m3)", "pm25")
       .withColumn("ts", to_timestamp(col("datetime")))
     // W3 first 12 hourly rows of each (station, day) file (iqair.js:140)
@@ -146,7 +148,7 @@ object AirGradientPipeline extends Pipelines.ProviderPipeline {
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
     val dim = graft.measurand.Measurands.supported(spark, lookup)
-    val raw = graft.sources.Ingest.readJson(spark, inputPath)
+    val raw = Ingest.readJson(spark, inputPath, Schemas.Payload.airgradient)
     val devices = raw.select(explode(col("devices")).as("d"))
       .select(col("d.locationId").as("locationId"),
         col("d.locationName").as("locationName"),
@@ -190,7 +192,7 @@ object SmartSensePipeline extends Pipelines.ProviderPipeline {
   override val isV01 = true
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
-    val raw = graft.sources.Ingest.readJson(spark, inputPath)
+    val raw = Ingest.readJson(spark, inputPath, Schemas.Payload.smartsense)
     val devices = raw.select(explode(col("devices")).as("d"))
       .select(col("d.deviceId").as("deviceId"), col("d.label").as("label"),
         col("d.lon").as("lon"), col("d.lat").as("lat"))

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.functions.ColumnFns
 import graft.measurand.Measurands
-import graft.model.MeasurandRule
+import graft.model.{MeasurandRule, Schemas}
 import graft.sources.Ingest
 import graft.transform.Transform
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -25,7 +25,7 @@ object HawanamaPipeline extends Pipelines.ProviderPipeline {
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
     val dim = Measurands.supported(spark, lookup)
-    val raw = Ingest.readJson(spark, inputPath)
+    val raw = Ingest.readJson(spark, inputPath, Schemas.Payload.hawanama)
     // locations endpoint `results` (hawanama.js:52-62; shape :105-118)
     val locDocs = raw.select(explode(col("locations")).as("l"))
       .select(col("l.location_id").as("location_id"),
@@ -60,7 +60,7 @@ object AirQoPipeline extends Pipelines.ProviderPipeline {
   val params = Seq("pm2_5", "pm10")
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
-    val raw = Ingest.readJson(spark, inputPath)
+    val raw = Ingest.readJson(spark, inputPath, Schemas.Payload.airqo)
     // S11: one array per cohort response, unioned (airqo.js:58-75)
     val cohorts = raw.select(explode(col("cohorts")).as("c"))
       .select(explode(col("c.measurements")).as("m"))
@@ -91,7 +91,7 @@ object AirQoonPipeline extends Pipelines.ProviderPipeline {
   override val isV01 = true
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
-    val raw = Ingest.readJson(spark, inputPath)
+    val raw = Ingest.readJson(spark, inputPath, Schemas.Payload.airqoon)
     val devices = raw.select(explode(col("Data")).as("d"))
       .select(col("d.Id").as("Id"), col("d.Name").as("Name"),
         col("d.Location.Longitude").as("lon"),
@@ -123,7 +123,7 @@ object Data354Pipeline extends Pipelines.ProviderPipeline {
   val params = Seq("PM25", "PM10")
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
-    val raw = Ingest.readJson(spark, inputPath)
+    val raw = Ingest.readJson(spark, inputPath, Schemas.Payload.data354)
     val stations = raw.select(explode(col("stations")).as("s"))
       .select(col("s.station_id").as("station_id"),
         col("s.station_name").as("station_name"),
@@ -162,7 +162,7 @@ object MiriPipeline extends Pipelines.ProviderPipeline {
   val params = Seq("pm25", "pm10")
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
-    val raw = Ingest.readJson(spark, inputPath)
+    val raw = Ingest.readJson(spark, inputPath, Schemas.Payload.miri)
     // S12: first element of the device list is metadata (miri.js:74)
     val devices = Ingest.dropFirstRow(
       raw.select(posexplode(col("devices")).as(Seq("idx", "d"))),
@@ -199,7 +199,7 @@ object SenstatePipeline extends Pipelines.ProviderPipeline {
   val name = "senstate"
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
-    val raw = Ingest.readJson(spark, inputPath)
+    val raw = Ingest.readJson(spark, inputPath, Schemas.Payload.senstate)
     val readings = raw.select(explode(col("readings")).as("r"))
       .filter(col("r.statusCode") === 200) // P5 (senstate.js:57)
       .select(col("r.token").as("token"), col("r.name").as("name"),
@@ -257,10 +257,12 @@ object CpcbPipeline extends Pipelines.ProviderPipeline {
   val referenceNow = "2024-04-30 17:00:00" // recorded-payload clock (IST)
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
-    val stations = Ingest.readCsv(spark, s"$inputPath/stations.csv")
+    val stations = Ingest.readCsv(spark, s"$inputPath/stations.csv",
+      Schemas.Payload.cpcbStationsCsv)
     val locs = V01.locations(stations, name, col("station_id"),
       col("station_name"), col("longitude"), col("latitude"))
-    val rows = Ingest.readCsv(spark, s"$inputPath/measurements.csv")
+    val rows = Ingest.readCsv(spark, s"$inputPath/measurements.csv",
+        Schemas.Payload.cpcbMeasurementsCsv)
       .filter(col("parameter").isin(params: _*)) // P14 (cpcb.js:154)
       // timestamps are IST-local naive strings (cpcb.js:152)
       .withColumn("ts", Transform.normalizeTs(col("datetime_local"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.functions.ColumnFns
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -165,7 +166,7 @@ object RelQueries {
       Tables.events(s, d)
         .filter(hour.between(lit("2024-01-05 00:00:00"), lit("2024-01-06 23:00:00")))
         .groupBy(date_format(hour, TS).as("hour"))
-        .agg(round(avg(col("value")), 2).as("avg_value"),
+        .agg(ColumnFns.roundBinary(avg(col("value")), 2).as("avg_value"),
              count(lit(1)).as("n"))
     }),
 

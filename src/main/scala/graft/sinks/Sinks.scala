@@ -4,6 +4,7 @@ import graft.model.Schemas
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 
 import java.util.concurrent.TimeoutException
 import scala.concurrent.Await
@@ -144,8 +145,16 @@ object Sinks {
       verbose, verboseLimit)._1
 
   /** [[diffWriteStations]] that also returns the observed K5 station
-    * count, taken on the `localCheckpoint` job that always scans the
-    * incoming stations. */
+    * count.
+    *
+    * One pass over the incoming stations: the md5-tagged stations are
+    * left-joined to the previous snapshot, flagged changed or not, and
+    * pinned by one `localCheckpoint` job.  That job also observes the
+    * K5 station count and the changed count, the returned subset is a
+    * filter over the pin, and the snapshot rewrite writes the pin — so
+    * the stations are derived from the payload once, and the changed
+    * count needs no probe of its own.  The snapshot is read with the
+    * key and JSON columns' known types, so no job reads a footer. */
   private[graft] def diffWriteStationsObserved(spark: SparkSession,
       stations: DataFrame, keyCol: String, jsonCol: String, path: String,
       force: Boolean = false, verbose: Boolean = false,
@@ -158,13 +167,14 @@ object Sinks {
     // whose localCheckpoint dies in LocalTableScanExec.metrics (NPE).
     // The caller's active session is restored on return.
     ColumnBridge.withActive(spark) {
-      val obs = Observation()
+      val (seenObs, changedObs) = (Observation(), Observation())
       val incoming = stations
         .withColumn("__hash", md5(col(jsonCol)))
-        .observe(obs, count(lit(1)).as("locations"))
+        .observe(seenObs, count(lit(1)).as("locations"))
       val rpath = resolvePath(path)
-      val changed =
-        if (force || !pathExists(spark, rpath)) incoming
+      val flagged =
+        if (force || !pathExists(spark, rpath))
+          incoming.withColumn("__changed", lit(true))
         else {
           // skinny build side (key + md5 only) but NO broadcast hint: let
           // AQE pick broadcast vs shuffled-hash from the runtime size —
@@ -174,17 +184,21 @@ object Sinks {
           val prevCols = col(keyCol).as("__k") +:
             md5(col(jsonCol)).as("__prev_hash") +:
             (if (verbose) Seq(col(jsonCol).as("__prev_json")) else Nil)
-          val prev = spark.read.parquet(rpath).select(prevCols: _*)
-          incoming.join(prev,
-              incoming(keyCol) === col("__k"), "left")
-            .filter(col("__prev_hash").isNull ||
+          val prev = spark.read
+            .schema(StructType(Seq(stations.schema(keyCol), stations.schema(jsonCol))))
+            .parquet(rpath).select(prevCols: _*)
+          incoming.join(prev, incoming(keyCol) === col("__k"), "left")
+            .withColumn("__changed", col("__prev_hash").isNull ||
               col("__hash") =!= col("__prev_hash"))
             .drop("__k", "__prev_hash")
         }
       // materialize + cut lineage BEFORE overwriting the snapshot the
       // diff was computed against (self-overwrite hazard)
-      val out = changed.drop("__hash").localCheckpoint()
-      val locations = observed(obs).map(_.getLong(0))
+      val pinned = flagged.drop("__hash")
+        .observe(changedObs, count_if(col("__changed")).as("changed"))
+        .localCheckpoint()
+      val locations = observed(seenObs).map(_.getLong(0))
+      val out = pinned.filter(col("__changed"))
       if (verbose) {
         // VERBOSE parity (`providers.js:104-118`): per changed station,
         // an Update block rendering the new and previous documents via
@@ -208,14 +222,13 @@ object Sinks {
             println(s"finished station: $key\n------------------------")
           }
       }
-      val outClean =
-        if (out.columns.contains("__prev_json")) out.drop("__prev_json")
-        else out
-      if (!outClean.isEmpty) {
+      val changed = observed(changedObs).fold(!out.isEmpty)(_.getLong(0) > 0)
+      if (changed) {
         // full refreshed snapshot so the next diff sees current state
-        incoming.drop("__hash").write.mode(SaveMode.Overwrite).parquet(rpath)
+        pinned.drop("__changed", "__prev_json")
+          .write.mode(SaveMode.Overwrite).parquet(rpath)
       }
-      (outClean, locations)
+      (out.drop("__changed", "__prev_json"), locations)
     }
 
   /** VERBOSE parity renderer (`utils.js:146-170` prettyPrintStation):
@@ -375,29 +388,31 @@ object Sinks {
   }
 
   /** K6 — watermark persistence (`meta.js:11-42`): tiny parquet state
-    * table keyed by source. */
+    * table keyed by source, read with its known schema (no footer job). */
+  private val watermarkSchema = StructType(Seq(
+    StructField("source", StringType), StructField("watermark", TimestampType)))
+
   def readWatermark(spark: SparkSession, path: String,
                     source: String): Option[java.sql.Timestamp] = {
     if (!pathExists(spark, path)) None
-    else spark.read.parquet(path)
+    else spark.read.schema(watermarkSchema).parquet(path)
       .filter(col("source") === source)
       .select(max(col("watermark"))).collect()
       .headOption.flatMap(r => Option(r.getTimestamp(0)))
   }
 
+  /** Upsert `source`'s watermark: one job collects the other sources'
+    * rows, one rewrites the table. */
   def writeWatermark(spark: SparkSession, path: String, source: String,
                      wm: java.sql.Timestamp): Unit = {
-    import spark.implicits._
-    val cur =
+    val others =
       if (pathExists(spark, path))
-        spark.read.parquet(path).filter(col("source") =!= source)
-      else Seq.empty[(String, java.sql.Timestamp)]
-        .toDF("source", "watermark")
-    val merged = cur.unionByName(Seq((source, wm)).toDF("source", "watermark"))
-      .collect() // tiny state table; rewrite atomically below
+        spark.read.schema(watermarkSchema).parquet(path)
+          .filter(col("source") =!= source).collect().toSeq
+      else Nil
     spark.createDataFrame(
-        spark.sparkContext.parallelize(merged.toIndexedSeq, 1),
-        cur.schema)
+        spark.sparkContext.parallelize(others :+ Row(source, wm), 1),
+        watermarkSchema)
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
 

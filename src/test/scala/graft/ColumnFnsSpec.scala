@@ -79,4 +79,20 @@ class ColumnFnsSpec extends SparkSpec {
       .orderBy("id").collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     assert(back.toSeq == Seq((1L, 2.0, 3.0), (2L, 5.0, 7.0)))
   }
+
+  test("roundBinary rounds the binary double half away from zero, as the " +
+    "oracle does; w4_hour_buckets' 79.695 bucket at sf0.001 reads 79.69") {
+    // expected values are DuckDB's round(x, 2) and round(x, 0): 79.695
+    // is stored as 79.69499… and rounds to 79.69 (Spark's round gives
+    // 79.7), while 2.675·100 is exactly 267.5 in binary and rounds up
+    val r = Seq(79.695, -79.695, 0.125, 2.675, 1.005, 12.5).toDF("x")
+      .select(ColumnFns.roundBinary($"x", 2), ColumnFns.roundBinary($"x", 0))
+      .as[(Double, Double)].collect()
+    assert(r.toSeq == Seq((79.69, 80.0), (-79.69, -80.0), (0.13, 0.0),
+      (2.68, 3.0), (1.0, 1.0), (12.5, 13.0)))
+    val bucket = SparkEntry.queries("w4_hour_buckets")(spark, sf0001)
+      .filter($"hour" === "2024-01-06 17:00:00")
+      .select($"avg_value", $"n").as[(Double, Long)].collect()
+    assert(bucket.toSeq == Seq((79.69, 2L)))
+  }
 }

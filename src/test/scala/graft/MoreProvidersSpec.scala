@@ -87,4 +87,36 @@ class MoreProvidersSpec extends SparkSpec {
     // newest file 12_00 → 11:45 EDT = 15:45 UTC
     assert(wm.map(_.toString).contains("2020-07-17 15:45:00.0"))
   }
+
+  test("cmu watermark comes from the file names with no Spark job, skips " +
+    "header-only files, and its upsert runs at most 2 jobs") {
+    val glob = fixture("cmu").stripSuffix("/") + "/*.csv"
+    val (wm, jobs) = jobsDuring(CmuPipeline.maxFileTimestamp(spark, glob))
+    assert(jobs == 0, s"$jobs Spark jobs")
+    // newest file 12_00 → 11:45 EDT = 15:45 UTC
+    assert(wm.toString == "2020-07-17 15:45:00.0")
+    // a newer file holding only a header adds no row to the batch, so
+    // it does not move the watermark
+    val dir = java.nio.file.Files.createTempDirectory("graft_cmuwm_")
+    new java.io.File(fixture("cmu")).listFiles().foreach(f =>
+      java.nio.file.Files.copy(f.toPath, dir.resolve(f.getName)))
+    val header = java.nio.file.Files.readAllLines(
+      new java.io.File(fixture("cmu")).listFiles().head.toPath).get(0)
+    java.nio.file.Files.writeString(
+      dir.resolve("Location_Data 2020-07-17 12_15.csv"), header + "\n\n")
+    assert(CmuPipeline.maxFileTimestamp(spark, s"$dir/*.csv").toString ==
+      "2020-07-17 15:45:00.0")
+    assert(CmuPipeline.maxFileTimestamp(spark, dir.toString).toString ==
+      "2020-07-17 15:45:00.0")
+    assert(CmuPipeline.maxFileTimestamp(spark, s"$dir/*12_15.csv") == null)
+    val out = java.nio.file.Files.createTempDirectory("graft_cmuwm2_").toString
+    Sinks.writeWatermark(spark, s"$out/wm", "other",
+      java.sql.Timestamp.valueOf("2020-01-01 00:00:00"))
+    val (_, upsertJobs) = jobsDuring(
+      Sinks.writeWatermark(spark, s"$out/wm", "cmu", wm))
+    assert(upsertJobs <= 2, s"$upsertJobs Spark jobs")
+    assert(Sinks.readWatermark(spark, s"$out/wm", "cmu").contains(wm))
+    assert(Sinks.readWatermark(spark, s"$out/wm", "other").map(_.toString)
+      .contains("2020-01-01 00:00:00.0"))
+  }
 }

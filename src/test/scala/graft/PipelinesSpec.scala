@@ -75,6 +75,34 @@ class PipelinesSpec extends SparkSpec {
     assert(forced.count() == 2)
   }
 
+  test("K1 diff-write on a warm snapshot runs at most 5 jobs, and a " +
+    "batch with no changed station rewrites nothing") {
+    val out = java.nio.file.Files.createTempDirectory("graft_k1j_").toString
+    val st = Transform.stationJson(
+      PurpleAirPipeline.run(spark, fixture("purpleair.json")).stations)
+    val snap = new java.io.File(s"$out/stations")
+    Sinks.diffWriteStations(spark, st, "sensor_node_id", "json", snap.toString)
+    def files = snap.listFiles().map(f => f.getName -> f.lastModified()).toSet
+    val before = files
+    val (same, jobs) = jobsDuring(Sinks.diffWriteStations(spark, st,
+      "sensor_node_id", "json", snap.toString))
+    assert(jobs <= 5, s"unchanged warm diff ran $jobs Spark jobs")
+    assert(same.count() == 0)
+    assert(files == before, "an unchanged batch rewrote the snapshot")
+    val renamed = st.withColumn("json", when($"sensor_node_id" === "purpleair-123",
+      regexp_replace($"json", "Site A", "Site A2")).otherwise($"json"))
+    val (changed, jobs2) = jobsDuring(Sinks.diffWriteStations(spark, renamed,
+      "sensor_node_id", "json", snap.toString))
+    assert(jobs2 <= 5, s"changed warm diff ran $jobs2 Spark jobs")
+    assert(changed.select("sensor_node_id").as[String].collect().toSeq ==
+      Seq("purpleair-123"))
+    // the rewrite holds the whole batch, the changed station included
+    val rewritten = spark.read.parquet(snap.toString)
+      .select("sensor_node_id", "json").as[(String, String)].collect().toMap
+    assert(rewritten.keySet == Set("purpleair-123", "purpleair-456"))
+    assert(rewritten("purpleair-123").contains("Site A2"))
+  }
+
   test("K1 diff-write restores the caller's active session") {
     val out = java.nio.file.Files.createTempDirectory("graft_k1s_").toString
     val st = Transform.stationJson(

@@ -3,6 +3,7 @@ package graft
 import graft.pipeline.Scheduler
 import graft.sources.Ingest
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class SchedulerSpec extends SparkSpec {
   import spark.implicits._
@@ -174,6 +175,89 @@ class SchedulerSpec extends SparkSpec {
       Map("clarity" -> fixture("clarity.json")), out)
     assert(results.map(_.provider) == Seq("clarity") && results.head.ok)
     assert(new java.io.File(s"$out/measures-json/clarity").exists())
+  }
+
+  test("malformed payloads on the product path: truncated, wrong-typed, " +
+    "empty and zero-byte inputs never escape the tick; each provider is ok " +
+    "with a K7-empty summary or a captured error") {
+    import java.nio.file.{Files, Path}
+    import graft.pipeline.Pipelines
+    import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val fx = java.nio.file.Paths.get(fixture("cmu")).getParent
+    // provider -> (payload files relative to the fixture root, input path
+    // relative to the case directory)
+    val payloads = Pipelines.registry.keys.toSeq.sorted.map {
+      case "cmu" => "cmu" -> (Seq("cmu/Location_Data 2020-07-17 11_45.csv",
+        "cmu/Location_Data 2020-07-17 12_00.csv"), "cmu/*.csv")
+      case "cpcb" => "cpcb" -> (Seq("cpcb/stations.csv",
+        "cpcb/measurements.csv"), "cpcb")
+      case "iqair" => "iqair" -> (Seq("iqair.csv"), "iqair.csv")
+      case p => p -> (Seq(s"$p.json"), s"$p.json")
+    }
+    val csvProviders = Set("cmu", "cpcb", "iqair")
+    def lines(csv: String) = csv.linesIterator.toSeq
+    def emptied(n: ObjectNode): ObjectNode = {
+      n.fieldNames().asScala.toSeq.foreach { f =>
+        n.get(f) match {
+          case _: ArrayNode => n.set[ObjectNode](f, mapper.createArrayNode())
+          case o: ObjectNode => emptied(o)
+          case _ =>
+        }
+      }
+      n
+    }
+    def wrongTyped(n: ObjectNode): ObjectNode = {
+      n.fieldNames().asScala.toSeq.foreach(f => n.put(f, "wrong"))
+      n
+    }
+    def doc(text: String) = mapper.readTree(text).asInstanceOf[ObjectNode]
+    // case -> (JSON payload rewrite, CSV file rewrite).  A CSV cut in
+    // half keeps the rows before the cut, so only the JSON half of the
+    // truncated case must come back empty.
+    val cases: Seq[(String, String => String, String => String)] = Seq(
+      ("truncated", t => t.take(t.length / 2), t => t.take(t.length / 2)),
+      ("wrong-typed", t => wrongTyped(doc(t)).toString,
+        t => (lines(t).head +: lines(t).tail.map(_.split(",", -1)
+          .map(_ => "wrong").mkString(","))).mkString("\n")),
+      ("empty arrays", t => emptied(doc(t)).toString, t => lines(t).head),
+      ("zero-byte", _ => "", _ => ""))
+    val outcomes = cases.map { case (name, json, csv) =>
+      val root = Files.createTempDirectory("graft_malformed_")
+      val cfg = Files.createDirectories(root.resolve("sources"))
+      val inputs = payloads.map { case (p, (files, input)) =>
+        Files.writeString(cfg.resolve(s"$p.json"), s"""{"schema": "v1", """ +
+          s""""provider": "$p", "frequency": "hour", "active": true}""")
+        files.foreach { f =>
+          val text = Files.readString(fx.resolve(f))
+          val dest: Path = root.resolve("in").resolve(f)
+          Files.createDirectories(dest.getParent)
+          Files.writeString(dest, if (f.endsWith(".json")) json(text) else csv(text))
+        }
+        p -> root.resolve("in").resolve(input).toString
+      }.toMap
+      val results = Scheduler.runDue(spark, cfg.toString, "hour", inputs,
+        root.resolve("out").toString)
+      assert(results.map(_.provider) == payloads.map(_._1), name)
+      name -> results.map { r =>
+        val outcome =
+          if (r.ok) {
+            val s = r.summary.get.collect().head
+            val k7Empty = s.getLong(2) == 0 && s.isNullAt(3) && s.isNullAt(4)
+            assert(k7Empty || (name == "truncated" && csvProviders(r.provider)),
+              s"$name ${r.provider}: summary $s is not K7-empty")
+            s"ok(${s.getLong(1)}/${s.getLong(2)})"
+          } else {
+            assert(r.error.exists(_.nonEmpty), s"$name ${r.provider}")
+            "error"
+          }
+        r.provider -> outcome
+      }
+    }
+    outcomes.foreach { case (name, rs) =>
+      println(s"[malformed] $name: " + rs.map { case (p, o) => s"$p=$o" }
+        .mkString(", "))
+    }
   }
 }
 

@@ -151,4 +151,12 @@ class V01Providers2Spec extends SparkSpec {
         r.getTimestamp(4).toInstant.toString) == fixtureK5(p), p)
     }
   }
+
+  test("building a batch runs no Spark job: every payload is read with " +
+    "its declared schema") {
+    for (p <- Pipelines.registry.keys.toSeq.sorted) {
+      val (_, jobs) = jobsDuring(Pipelines.registry(p).run(spark, fixtureInput(p)))
+      assert(jobs == 0, s"$p: building the batch ran $jobs Spark jobs")
+    }
+  }
 }
