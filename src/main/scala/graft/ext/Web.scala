@@ -806,7 +806,7 @@ object Web {
     * loop owned by the engine (round-16 verdict #2): [[sitemapEntries]]
     * returns `kind = "index"` rows whose locs are MORE sitemaps to
     * fetch, and this operator runs that loop to the end, exactly the
-    * way [[graft.sources.Ingest.unionPages]] owns the reference's
+    * way HabitatMap's `posexplode(mobile_pages)` owns the reference's
     * page-accumulation loop (SURVEY S10 — `habitatmap.js:166-207`'s
     * driver-loop shape applied to discovery).
     *

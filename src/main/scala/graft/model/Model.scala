@@ -119,6 +119,15 @@ object Schemas {
   val mobileMeasure: StructType = fixedMeasure
     .add("longitude", DoubleType).add("latitude", DoubleType)
 
+  /** K5 run summary (`providers.js:59-71`): one row per provider run;
+    * `from`/`to` are null when the batch has no measures. */
+  val runSummary: StructType = StructType(Seq(
+    StructField("source_name", StringType, nullable = false),
+    StructField("locations", LongType, nullable = false),
+    StructField("measures", LongType, nullable = false),
+    StructField("from", TimestampType, nullable = true),
+    StructField("to", TimestampType, nullable = true)))
+
   /** CSV header orders are part of the sink contract (`measure.js:13-17`). */
   val fixedCsvHeader: Seq[String] = Seq("sensor_id", "measure", "timestamp")
   val mobileCsvHeader: Seq[String] =

@@ -36,7 +36,7 @@ object HabitatMapPipeline extends Pipelines.ProviderPipeline {
         col("s.streams.`AirBeam2-PM2.5`.average_value").as("value"))
       .filter(col("stream_id").isNotNull)
     val fixedMeasures = Transform
-      .dropNullMeasures(fixedSessions, "value")
+      .dropNullMeasures(fixedSessions)
       .select(
         ColumnFns.synthId(lit("HabitatMap"), col("stream_id"), lit("pm25"))
           .as("sensor_id"),
@@ -45,9 +45,10 @@ object HabitatMapPipeline extends Pipelines.ProviderPipeline {
           .as("timestamp"))
 
     // ---- mobile sessions: paged union + per-stream measurements ----
-    val pages = raw.select(posexplode(col("mobile_pages")).as(Seq("page", "p")))
-    val mobileSessions = Ingest.unionPages(Seq(
-      pages.select(col("page"), explode(col("p.sessions")).as("s"))))
+    // S10: the pages are unioned by the posexplode of `mobile_pages`
+    val mobileSessions = raw
+      .select(posexplode(col("mobile_pages")).as(Seq("page", "p")))
+      .select(col("page"), explode(col("p.sessions")).as("s"))
       .select(col("s.id").as("session_id"), col("s.title").as("title"),
         col("s.streams.`AirBeam2-PM2.5`.id").as("stream_id"))
       .filter(col("stream_id").isNotNull)

@@ -6,7 +6,7 @@ import graft.model._
 import graft.sinks.Sinks
 import graft.sources.Ingest
 import graft.transform.Transform
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Provider pipelines — SURVEY.md §3.
@@ -63,8 +63,8 @@ object Pipelines {
     * PurpleAir-style providers upsert station docs + CSV measures
     * (`providers.js:94-159`); v0.1-style providers write the JSON
     * envelope (`providers.js:168-185`).  The K5 summary is a local
-    * one-row frame built from the metrics the sink writes observed
-    * ([[Sinks.summarizeObserved]]), so it costs no pass of its own. */
+    * one-row frame of the values the sink writers return, so
+    * collecting it runs no Spark job. */
   def processor(spark: SparkSession, provider: String, inputPath: String,
                 outDir: String): DataFrame = {
     val p = registry.getOrElse(provider,
@@ -73,20 +73,23 @@ object Pipelines {
   }
 
   /** The sink half of [[processor]]: write `batch` in `p`'s sink style
-    * and return its K5 summary. */
+    * and return its K5 summary, built from the values the writers
+    * returned. */
   private[graft] def sinkBatch(spark: SparkSession, p: ProviderPipeline,
                                batch: Batch, inputPath: String,
                                outDir: String): DataFrame = {
     val provider = p.name
-    val seen = p match {
+    val (locations, stats) = p match {
       case v01 if v01.isV01 =>
-        Sinks.writeEnvelopeJsonObserved(batch.measures.drop("flags"),
-          batch.stations, provider, s"$outDir/measures-json/$provider")._2
+        val (_, locations, stats) = Sinks.writeEnvelopeJson(
+          batch.measures.drop("flags"), batch.stations, provider,
+          s"$outDir/measures-json/$provider")
+        (locations, stats)
       case _ =>
-        val stationsJson = Transform.stationJson(batch.stations)
-        val (_, locations) = Sinks.diffWriteStationsObserved(spark,
-          stationsJson, "sensor_node_id", "json", s"$outDir/stations/$provider")
-        val (_, measures) = Sinks.writeMeasuresCsvObserved(batch.measures,
+        val (_, locations) = Sinks.diffWriteStations(spark,
+          Transform.stationJson(batch.stations), "sensor_node_id", "json",
+          s"$outDir/stations/$provider")
+        val stats = Sinks.writeMeasuresCsv(batch.measures,
           s"$outDir/measures/$provider")
         batch.mobileMeasures.foreach(m =>
           Sinks.writeMeasuresCsv(m, s"$outDir/measures/$provider-mobile",
@@ -95,9 +98,10 @@ object Pipelines {
           Sinks.writeWatermark(spark, s"$outDir/meta/watermark", provider,
             CmuPipeline.maxFileTimestamp(spark, inputPath))
         }
-        Sinks.Observed(locations, measures)
+        (locations, stats)
     }
-    Sinks.summarizeObserved(provider, seen, batch.stations, batch.measures)
+    spark.createDataFrame(java.util.List.of(Row(provider, locations,
+      stats.measures, stats.from, stats.to)), Schemas.runSummary)
   }
 }
 

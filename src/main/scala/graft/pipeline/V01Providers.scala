@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * is a short composition of the shared layers exercising the operator
   * that makes it unique in SURVEY §2; the other v0.1 providers in the
   * reference (airqo, airqoon, data354, miri, senstate, cpcb) are
-  * combinations of exactly these shapes (cohort union S11 = unionPages,
+  * combinations of exactly these shapes (cohort union S11 = explode(cohorts),
   * device limit = limit, variables projection = select, geo-tz F16 =
   * ColumnFns.tzFromLon, zone cutoff = p12) — all already first-class
   * operators in the engine.

@@ -61,10 +61,10 @@ object AirQoPipeline extends Pipelines.ProviderPipeline {
 
   def run(spark: SparkSession, inputPath: String): Pipelines.Batch = {
     val raw = Ingest.readJson(spark, inputPath, Schemas.Payload.airqo)
-    // S11: one array per cohort response, unioned (airqo.js:58-75)
-    val cohorts = raw.select(explode(col("cohorts")).as("c"))
+    // S11: one array per cohort response, unioned by the explode of
+    // `cohorts` (airqo.js:58-75)
+    val readings = raw.select(explode(col("cohorts")).as("c"))
       .select(explode(col("c.measurements")).as("m"))
-    val readings = Ingest.unionPages(Seq(cohorts)) // shape locked to S11
       .select(col("m.site_id").as("site_id"), col("m.device").as("device"),
         col("m.time").as("time"),
         col("m.deviceDetails.longitude").as("lon"),

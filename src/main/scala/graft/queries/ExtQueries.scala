@@ -37,8 +37,6 @@ object ExtQueries {
     m
   }
 
-  private def docToks = array_distinct(TextAnalysis.tokens(col("text")))
-
   /** The cluster family (x20/x25/x27) shares ONE pair-generation +
     * connected-components computation per (session, dataset): the edge
     * set and its transitive closure are the expensive common prefix of

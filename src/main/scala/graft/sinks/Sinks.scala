@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{StringType, StructField, StructType, TimestampType}
 
+import java.sql.Timestamp
 import java.util.concurrent.TimeoutException
 import scala.concurrent.Await
 import scala.concurrent.duration._
@@ -28,27 +29,21 @@ import scala.concurrent.duration._
   * broadcast would hit the 8 GB broadcast hard limit / driver OOM at a
   * very large station dimension instead of degrading gracefully.
   *
-  * K5 rides on the writes: each provider's run summary takes its
-  * values from `Observation`s on the write jobs the sinks run anyway —
-  * `measures`, `from` and `to` from the measures a sink writes,
-  * `locations` from the stations it reads — so publishing a summary
-  * costs no pass of its own.  [[summarize]] is only the fallback for a
-  * metric Spark pruned (see [[Observed]]).
+  * K5 rides on the writes: each writer returns its K5 part as plain
+  * values — (measures, from, to) from the measures it writes, the
+  * station count from the stations it writes — taken from
+  * `Observation`s on the write jobs the sinks run anyway, so publishing
+  * a summary costs no pass of its own.  A value Spark does not deliver
+  * is recomputed from the writer's own input ([[exact]]), so every
+  * value is exact, never unknown.
   */
 object Sinks {
 
-  /** K5 values a sink observed on the rows its write job computed:
-    * `locations` counts the stations it read, `measures` is the
-    * (measures, from, to) row of the measures it wrote.  A value is
-    * None when the write did not run, or when Spark pruned the observed
-    * node from a plan the optimizer or AQE proved empty — its
-    * Observation then completes with an empty row.  None means
-    * unknown, never zero: [[summarizeObserved]] computes it. */
-  final case class Observed(locations: Option[Long] = None,
-                            measures: Option[Row] = None)
+  /** K5 `measures`, `from` and `to` of the measures a sink wrote, taken
+    * on the timestamp before it renders as text; `from`/`to` are null
+    * when there are no measures. */
+  final case class MeasureStats(measures: Long, from: Timestamp, to: Timestamp)
 
-  /** The K5 `measures`, `from` and `to` of a measures frame: one
-    * aggregate for the observed metric and the [[summarize]] fallback. */
   private val measureStats: Seq[Column] = Seq(
     count(lit(1)).as("measures"),
     min(col("timestamp")).as("from"),
@@ -62,12 +57,19 @@ object Sinks {
     * drops events when its queue is full. */
   private val ObservedWait = 10.seconds
 
-  /** The metrics row `obs` completed with; None when it came back empty
-    * (pruned node) or not within [[ObservedWait]].  Call only after an
-    * action over the observed frame has run. */
-  private def observed(obs: Observation): Option[Row] =
-    try Some(Await.result(obs.future, ObservedWait)).filter(_.length > 0)
-    catch { case _: TimeoutException => None }
+  /** The values of `metrics`, observed by `obs` on an action that has
+    * run.  When the Observation comes back empty (Spark pruned its node
+    * from a plan it proved empty) or not within [[ObservedWait]], they
+    * are computed over `input` instead, so the values are exact. */
+  private def exact(obs: Observation, input: DataFrame, metrics: Seq[Column]): Row =
+    (try Some(Await.result(obs.future, ObservedWait)).filter(_.length > 0)
+     catch { case _: TimeoutException => None })
+      .getOrElse(input.agg(metrics.head, metrics.tail: _*).head())
+
+  private def stats(obs: Observation, measures: DataFrame): MeasureStats = {
+    val r = exact(obs, measures, measureStats)
+    MeasureStats(r.getLong(0), r.getTimestamp(1), r.getTimestamp(2))
+  }
 
   /** K4 — dry-run redirection (`utils.js:75-80`): when set, every sink
     * path is rebased under a local inspection directory instead of the
@@ -93,22 +95,17 @@ object Sinks {
 
   /** K2 — gzipped headered measures CSV.  `mobile` switches the header
     * contract.  Timestamps render as ISO at the boundary (internal type
-    * stays TimestampType).
+    * stays TimestampType).  Returns the K5 (measures, from, to) of what
+    * it wrote.
     *
-    * Single pass: the row count rides on the write job as an
-    * `observe()` metric instead of a separate `count()` action — at
-    * scale the batch is computed once, not twice.  The K7 empty-batch
-    * guard inverts to write-then-unlink: an empty batch's output
-    * directory is removed (a metadata-only op), leaving no object —
-    * same contract as the reference's pre-write check. */
+    * Single pass: the K5 values ride on the write job as `observe()`
+    * metrics instead of a separate `count()` action — at scale the batch
+    * is computed once, not twice.  The K7 empty-batch guard inverts to
+    * write-then-unlink: an empty batch's output directory is removed (a
+    * metadata-only op), leaving no object — same contract as the
+    * reference's pre-write check. */
   def writeMeasuresCsv(measures: DataFrame, path: String,
-                       mobile: Boolean = false): Long =
-    writeMeasuresCsvObserved(measures, path, mobile)._1
-
-  /** [[writeMeasuresCsv]] that also returns the observed K5 (measures,
-    * from, to) row, taken on the timestamp before it renders as text. */
-  private[graft] def writeMeasuresCsvObserved(measures: DataFrame, path: String,
-      mobile: Boolean = false): (Long, Option[Row]) = {
+                       mobile: Boolean = false): MeasureStats = {
     val header = if (mobile) Schemas.mobileCsvHeader else Schemas.fixedCsvHeader
     val obs = Observation()
     val rpath = resolvePath(path)
@@ -119,10 +116,9 @@ object Sinks {
       .write.mode(SaveMode.Overwrite)
       .option("header", "true").option("compression", "gzip")
       .csv(rpath)
-    val stats = observed(obs)
-    val n = stats.fold(measures.count())(_.getLong(0))
-    if (n == 0) deleteQuiet(measures.sparkSession, rpath) // K7
-    (n, stats)
+    val written = stats(obs, measures)
+    if (written.measures == 0) deleteQuiet(measures.sparkSession, rpath) // K7
+    written
   }
 
   private def deleteQuiet(spark: SparkSession, path: String): Unit = {
@@ -135,30 +131,20 @@ object Sinks {
     * differs from the previous snapshot (`providers.js:94-132`).
     * Change detection joins on the node key and compares content
     * hashes — the CDC anti-join of SURVEY §2.3 J7.  Returns the changed
-    * subset (written iff non-empty). */
-  def diffWriteStations(spark: SparkSession, stations: DataFrame,
-                        keyCol: String, jsonCol: String, path: String,
-                        force: Boolean = false,
-                        verbose: Boolean = false,
-                        verboseLimit: Int = 50): DataFrame =
-    diffWriteStationsObserved(spark, stations, keyCol, jsonCol, path, force,
-      verbose, verboseLimit)._1
-
-  /** [[diffWriteStations]] that also returns the observed K5 station
-    * count.
+    * subset (written iff non-empty) and the K5 station count.
     *
     * One pass over the incoming stations: the md5-tagged stations are
     * left-joined to the previous snapshot, flagged changed or not, and
     * pinned by one `localCheckpoint` job.  That job also observes the
-    * K5 station count and the changed count, the returned subset is a
+    * station count and the changed count, the returned subset is a
     * filter over the pin, and the snapshot rewrite writes the pin — so
     * the stations are derived from the payload once, and the changed
     * count needs no probe of its own.  The snapshot is read with the
     * key and JSON columns' known types, so no job reads a footer. */
-  private[graft] def diffWriteStationsObserved(spark: SparkSession,
-      stations: DataFrame, keyCol: String, jsonCol: String, path: String,
-      force: Boolean = false, verbose: Boolean = false,
-      verboseLimit: Int = 50): (DataFrame, Option[Long]) =
+  def diffWriteStations(spark: SparkSession, stations: DataFrame,
+                        keyCol: String, jsonCol: String, path: String,
+                        force: Boolean = false,
+                        verbose: Boolean = false): (DataFrame, Long) =
     // session-lifecycle scope (round-20 verdict #1): this entry point is
     // handed its session explicitly, so never depend on the calling
     // thread's active-session thread-local — Spark 4's SparkPlan
@@ -167,10 +153,7 @@ object Sinks {
     // whose localCheckpoint dies in LocalTableScanExec.metrics (NPE).
     // The caller's active session is restored on return.
     ColumnBridge.withActive(spark) {
-      val (seenObs, changedObs) = (Observation(), Observation())
-      val incoming = stations
-        .withColumn("__hash", md5(col(jsonCol)))
-        .observe(seenObs, count(lit(1)).as("locations"))
+      val incoming = stations.withColumn("__hash", md5(col(jsonCol)))
       val rpath = resolvePath(path)
       val flagged =
         if (force || !pathExists(spark, rpath))
@@ -194,23 +177,26 @@ object Sinks {
         }
       // materialize + cut lineage BEFORE overwriting the snapshot the
       // diff was computed against (self-overwrite hazard)
+      val obs = Observation()
+      val counts = Seq(count(lit(1)).as("locations"),
+        count_if(col("__changed")).as("changed"))
       val pinned = flagged.drop("__hash")
-        .observe(changedObs, count_if(col("__changed")).as("changed"))
+        .observe(obs, counts.head, counts.tail: _*)
         .localCheckpoint()
-      val locations = observed(seenObs).map(_.getLong(0))
+      val seen = exact(obs, pinned, counts)
       val out = pinned.filter(col("__changed"))
       if (verbose) {
         // VERBOSE parity (`providers.js:104-118`): per changed station,
         // an Update block rendering the new and previous documents via
         // [[prettyPrintStation]].  Console output is driver-side by
-        // nature, so it is bounded (`verboseLimit`) — the reference
+        // nature, so it is bounded to 50 stations — the reference
         // prints every station because its batches are per-provider
         // small; at corpus scale use [[stationFieldDiffs]] for the
         // data-plane form of the same information.
         out.select(col(keyCol).cast("string"), col(jsonCol),
             if (out.columns.contains("__prev_json")) col("__prev_json")
             else lit(null).cast("string"))
-          .limit(verboseLimit).collect().foreach { r =>
+          .limit(50).collect().foreach { r =>
             val (key, now) = (r.getString(0), r.getString(1))
             println("-------------------------\nUpdate " + key +
               "\n----------------------> to:")
@@ -222,13 +208,12 @@ object Sinks {
             println(s"finished station: $key\n------------------------")
           }
       }
-      val changed = observed(changedObs).fold(!out.isEmpty)(_.getLong(0) > 0)
-      if (changed) {
+      if (seen.getLong(1) > 0) {
         // full refreshed snapshot so the next diff sees current state
         pinned.drop("__changed", "__prev_json")
           .write.mode(SaveMode.Overwrite).parquet(rpath)
       }
-      (out.drop("__changed", "__prev_json"), locations)
+      (out.drop("__changed", "__prev_json"), seen.getLong(0))
     }
 
   /** VERBOSE parity renderer (`utils.js:146-170` prettyPrintStation):
@@ -322,69 +307,43 @@ object Sinks {
   }
 
   /** K3 — v0.1 JSON envelope `{meta, measures, locations}`
-    * (`clarity.js:177-190`, sink `providers.js:168-185`).
+    * (`clarity.js:177-190`, sink `providers.js:168-185`).  Returns
+    * whether it wrote anything, the K5 station count and the K5
+    * (measures, from, to) of what it wrote.
     *
-    * Default mode writes one gzipped envelope per (provider, day)
-    * partition: measures group by their timestamp's day, each day's
-    * envelope serializes in its own task, and the layout is
-    * `provider=<p>/day=<d>/...` so readers partition-prune.  A batch
-    * therefore never funnels through a single serializer — the
-    * scale-safe default.  `singleDocument = true` restores the
-    * reference's one-JSON-document-per-batch contract (acceptable at
-    * per-source batch sizes of 10⁴–10⁵ rows). */
+    * One gzipped envelope per (provider, day) partition: measures group
+    * by their timestamp's day, each day's envelope serializes in its own
+    * task, and the layout is `provider=<p>/day=<d>/...` so readers
+    * partition-prune.  A batch therefore never funnels its measures
+    * through a single serializer.  The locations are rendered once, by
+    * one collect, and every day's document embeds them as a literal
+    * (the same list a cross-joined one-row aggregate would broadcast
+    * through the driver, without its aggregation job).  The station
+    * count is the length of that collect.  A batch with no measures
+    * writes nothing (K7). */
   def writeEnvelopeJson(measures: DataFrame, locations: DataFrame,
-                        source: String, path: String,
-                        singleDocument: Boolean = false): Boolean =
-    writeEnvelopeJsonObserved(measures, locations, source, path,
-      singleDocument)._1
-
-  /** [[writeEnvelopeJson]] that also returns the K5 values observed on
-    * its write: the (measures, from, to) row of the measures side,
-    * taken before the timestamp renders as text, and the count of the
-    * locations side.  Nothing is observed when K7 skips the write. */
-  private[graft] def writeEnvelopeJsonObserved(measures: DataFrame,
-      locations: DataFrame, source: String, path: String,
-      singleDocument: Boolean = false): (Boolean, Observed) = {
-    val (mObs, lObs) = (Observation(), Observation())
-    val m = observeStats(measures, mObs).withColumn("timestamp",
+                        source: String, path: String): (Boolean, Long, MeasureStats) = {
+    val obs = Observation()
+    val m = observeStats(measures, obs).withColumn("timestamp",
       date_format(col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss'Z'"))
-    val mCols = m.columns.map(col)
-    val locAgg = locations.observe(lObs, count(lit(1)).as("locations"))
-      .agg(collect_list(struct(locations.columns.map(col): _*)).as("locations"))
+    val locs = locations.select(to_json(struct(locations.columns.map(col): _*)))
+      .collect().map(_.getString(0))
     val meta = struct(lit("v0.1").as("schema"), lit(source).as("source"),
-      lit("ingest-id").as("matching_method")).as("meta")
+      lit("ingest-id").as("matching_method"))
     val rpath = resolvePath(path)
-    // the K7 probe reads the unobserved inputs: a `limit` over an
-    // observed frame would complete its Observation with partial counts
-    if (singleDocument && measures.isEmpty && locations.isEmpty)
-      (false, Observed()) // K7
-    else {
-      val envelopes =
-        if (singleDocument)
-          m.agg(collect_list(struct(mCols: _*)).as("measures"))
-            .crossJoin(locAgg)
-            .select(to_json(struct(meta, col("measures"), col("locations")))
-              .as("value"))
-            .write
-        else
-          m.withColumn("day", substring(col("timestamp"), 1, 10))
-            .groupBy(col("day"))
-            .agg(collect_list(struct(mCols: _*)).as("measures"))
-            .crossJoin(locAgg)
-            .select(lit(source).as("provider"), col("day"),
-              to_json(struct(meta, col("measures"), col("locations")))
-                .as("value"))
-            .write.partitionBy("provider", "day")
-      envelopes.mode(SaveMode.Overwrite).option("compression", "gzip")
-        .text(rpath)
-      val seen = Observed(observed(lObs).map(_.getLong(0)), observed(mObs))
-      // the per-day layout writes one envelope per measured day, so it
-      // wrote nothing iff the batch has no measures
-      val written = singleDocument ||
-        seen.measures.fold(measures.count())(_.getLong(0)) > 0
-      if (!written) deleteQuiet(measures.sparkSession, rpath) // K7
-      (written, seen)
-    }
+    m.withColumn("day", substring(col("timestamp"), 1, 10))
+      .groupBy(col("day"))
+      .agg(collect_list(struct(m.columns.map(col): _*)).as("measures"))
+      .select(lit(source).as("provider"), col("day"),
+        concat(lit("{\"meta\":"), to_json(meta), lit(",\"measures\":"),
+          to_json(col("measures")),
+          lit(locs.mkString(",\"locations\":[", ",", "]}"))).as("value"))
+      .write.partitionBy("provider", "day")
+      .mode(SaveMode.Overwrite).option("compression", "gzip")
+      .text(rpath)
+    val written = stats(obs, measures)
+    if (written.measures == 0) deleteQuiet(measures.sparkSession, rpath) // K7
+    (written.measures > 0, locs.length.toLong, written)
   }
 
   /** K6 — watermark persistence (`meta.js:11-42`): tiny parquet state
@@ -414,30 +373,5 @@ object Sinks {
         spark.sparkContext.parallelize(others :+ Row(source, wm), 1),
         watermarkSchema)
       .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
-  /** K5 — run-summary callback boundary (SNS in the reference): a
-    * one-row frame (`providers.js:59-71`), recomputed from `measures`.
-    * It defines the summary's shape; [[summarizeObserved]] runs it only
-    * as the fallback for a metric Spark pruned. */
-  def summarize(source: String, locations: Long, measures: DataFrame): DataFrame =
-    measures.agg(lit(source).as("source_name"),
-      lit(locations).as("locations") +: measureStats: _*)
-
-  /** K5 from what the sinks observed: a materialized one-row local frame
-    * with [[summarize]]'s columns and values, so collecting it runs no
-    * Spark job.  A value the sinks could not observe is computed from
-    * the batch — `stations.count()` for `locations`, the [[summarize]]
-    * aggregate for the rest — which happens only on K7-style empty
-    * batches, whose observed nodes Spark may prune. */
-  def summarizeObserved(source: String, seen: Observed, stations: DataFrame,
-                        measures: DataFrame): DataFrame = {
-    val locations = seen.locations.getOrElse(stations.count())
-    val shape = summarize(source, locations, measures)
-    val stats = seen.measures.getOrElse(
-      shape.select("measures", "from", "to").head())
-    measures.sparkSession.createDataFrame(
-      java.util.List.of(Row.fromSeq(Seq(source, locations) ++ stats.toSeq)),
-      shape.schema)
   }
 }

@@ -11,9 +11,10 @@ import org.apache.spark.sql.types.StructType
   * concerns; the data plane starts where bytes become rows.  These
   * adapters yield DataFrames from files (fixtures in tests, mounted
   * buckets in production) with the reference's scan semantics — active
-  * filter, pushdown-as-options, columnar pivot, pagination union,
-  * header drop — expressed declaratively so Catalyst prunes and pushes
-  * for free (SURVEY §4).
+  * filter, pushdown-as-options, columnar pivot, header drop —
+  * expressed declaratively so Catalyst prunes and pushes for free
+  * (SURVEY §4).  Pagination and cohort unions (S10/S11) are the
+  * pipelines' explodes over the payload's page and cohort arrays.
   */
 object Ingest {
 
@@ -43,8 +44,8 @@ object Ingest {
     * input, not an error. */
   def readJson(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("wholetext", "true").text(path)
-      .select(from_json(col("value"), schema).as("doc"))
-      .select(col("doc.*"))
+      // parse under a generator: a filter inferred above it cannot copy the parse
+      .select(inline(array(from_json(col("value"), schema))))
 
   /** S3/S5/S6 — CSV with headers and a declared schema, permissive parse
     * (bad cells → null), ragged rows tolerated (`iqair.js:66-82`
@@ -59,18 +60,10 @@ object Ingest {
   /** S9 — columnar→row pivot: `fields[]` + `data[][]` → named columns
     * (`purpleair.js:134-143`).  `fields` is driver-side (schema-sized),
     * the pivot itself is a pure projection. */
-  def columnarPivot(columnar: DataFrame, fields: Seq[String],
-                    dataCol: String = "data"): DataFrame =
+  def columnarPivot(columnar: DataFrame, fields: Seq[String]): DataFrame =
     columnar.select(fields.zipWithIndex.map { case (f, i) =>
-      col(dataCol).getItem(i).as(f)
+      col("data").getItem(i).as(f)
     }: _*)
-
-  /** S10/S11 — pagination / cohort accumulation: page readers produce
-    * DataFrames, union them by name (`habitatmap.js:166-207`,
-    * `airqo.js:58-75`).  Driver loops over pages; each page is still a
-    * distributed read. */
-  def unionPages(pages: Seq[DataFrame]): DataFrame =
-    pages.reduce(_ unionByName _)
 
   /** S12 — header-row drop: first element of the feed is metadata
     * (`miri.js:74`).  `orderCol` defines "first". */

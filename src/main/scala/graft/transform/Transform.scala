@@ -1,6 +1,5 @@
 package graft.transform
 
-import graft.functions.ColumnFns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -15,17 +14,16 @@ object Transform {
     * Null values melt too; follow with [[dropNullMeasures]] (P3). */
   def melt(df: DataFrame, idCols: Seq[String],
            valueCols: Seq[String],
-           paramName: String = "input_param",
            valueName: String = "value"): DataFrame = {
     val stackArgs = valueCols
       .map(c => s"'$c', cast(`$c` as double)").mkString(", ")
     df.selectExpr(idCols ++ Seq(
-      s"stack(${valueCols.size}, $stackArgs) AS ($paramName, $valueName)"): _*)
+      s"stack(${valueCols.size}, $stackArgs) AS (input_param, $valueName)"): _*)
   }
 
   /** P3 — null/NaN measure skip (`purpleair.js:60`, `cmu.js:171`). */
-  def dropNullMeasures(df: DataFrame, valueCol: String = "value"): DataFrame =
-    df.filter(col(valueCol).isNotNull && !isnan(col(valueCol)))
+  def dropNullMeasures(df: DataFrame): DataFrame =
+    df.filter(col("value").isNotNull && !isnan(col("value")))
 
   /** Timestamp-convention zoo (SURVEY §7.4.1) — table-driven per-source
     * normalization to UTC TimestampType. */
@@ -33,20 +31,14 @@ object Transform {
   case object EpochSeconds extends TsConvention
   case object EpochMillis extends TsConvention
   case object Iso extends TsConvention
-  /** Local-naive string in a zone, optionally shifted (CMU: −15 min). */
-  case class LocalNaive(zone: String, fmt: String, shiftMinutes: Int = 0)
-    extends TsConvention
-  /** Hour-beginning stamps rendered as hour-ending (`iqair.js:142`). */
-  case object HourBeginning extends TsConvention
+  /** Local-naive string in a zone. */
+  case class LocalNaive(zone: String, fmt: String) extends TsConvention
 
   def normalizeTs(c: Column, conv: TsConvention): Column = conv match {
     case EpochSeconds => timestamp_seconds(c.cast("long"))
     case EpochMillis  => timestamp_millis(c.cast("long"))
     case Iso          => to_timestamp(c)
-    case LocalNaive(zone, fmt, shift) =>
-      to_utc_timestamp(
-        to_timestamp(c, fmt) + expr(s"INTERVAL $shift MINUTES"), zone)
-    case HourBeginning => ColumnFns.hourEnding(to_timestamp(c))
+    case LocalNaive(zone, fmt) => to_utc_timestamp(to_timestamp(c, fmt), zone)
   }
 
   /** W1-style per-group recency slice: newest `k` rows per key. */
@@ -75,24 +67,19 @@ object Transform {
     * struct rows (one per node).  The reference builds these object
     * graphs imperatively (`station.js`); here it is one grouped
     * collect_list of structs — a single shuffle on the node key. */
-  def assembleStations(flat: DataFrame,
-                       nodeCols: Seq[String],
-                       manufacturerCol: Option[String] = None): DataFrame = {
+  def assembleStations(flat: DataFrame, nodeCols: Seq[String]): DataFrame = {
     val sensorStruct = struct(
       col("sensor_id"),
       col("measurand_parameter"),
       col("measurand_unit"))
-    val manu = manufacturerCol.map(col)
-      .getOrElse(lit(null).cast("string"))
     flat.groupBy(nodeCols.map(col): _*)
-      .agg(sort_array(collect_set(sensorStruct)).as("sensors"),
-        first(manu).as("manufacturer"))
+      .agg(sort_array(collect_set(sensorStruct)).as("sensors"))
       .withColumn("sensor_systems",
         array(struct(
           lit(null).cast("string").as("sensor_system_id"),
-          col("manufacturer").as("sensor_system_manufacturer_name"),
+          lit(null).cast("string").as("sensor_system_manufacturer_name"),
           col("sensors"))))
-      .drop("sensors", "manufacturer")
+      .drop("sensors")
   }
 
   /** P13 — station JSON rendering with null keys stripped

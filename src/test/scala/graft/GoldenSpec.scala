@@ -133,9 +133,9 @@ class GoldenSpec extends SparkSpec {
     assert(Golden.canonicalStations(spark, batch.stations, "sensor_node_id")
       == golden("purpleair_stations.jsonl"))
     assert(Sinks.diffWriteStations(spark, st, "sensor_node_id", "json",
-      s"$out/st").count() == 2)
+      s"$out/st")._1.count() == 2)
     assert(Sinks.diffWriteStations(spark, st, "sensor_node_id", "json",
-      s"$out/st").count() == 0)
+      s"$out/st")._1.count() == 0)
   }
 
   test("VERBOSE diff parity: prettyPrintStation renders the reference " +
@@ -163,14 +163,14 @@ class GoldenSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("graft_gvd_").toString
     val first = Seq(("n1", v1)).toDF("sensor_node_id", "json")
     assert(Sinks.diffWriteStations(spark, first, "sensor_node_id",
-      "json", s"$out/st").count() == 1)
+      "json", s"$out/st")._1.count() == 1)
     // providers.js:104-118: the changed station prints an Update block
     // with the new document then the previous one
     val bos = new java.io.ByteArrayOutputStream()
     val second = Seq(("n1", v2)).toDF("sensor_node_id", "json")
     val changed = Console.withOut(new java.io.PrintStream(bos, true, "UTF-8")) {
       Sinks.diffWriteStations(spark, second, "sensor_node_id", "json",
-        s"$out/st", verbose = true)
+        s"$out/st", verbose = true)._1
     }
     assert(changed.count() == 1)
     assert(changed.columns.toSeq == Seq("sensor_node_id", "json"))

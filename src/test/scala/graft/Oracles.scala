@@ -144,4 +144,31 @@ object Oracles {
       .withColumn("cum", col("__offset") + col("__pcum"))
       .drop("__pid", "__pcum", "__ridx", "__offset")
   }
+
+  /** The K5 run summary recomputed from a batch: the aggregate whose
+    * row [[graft.pipeline.Pipelines.sinkBatch]] builds from the values
+    * its sink writers return. */
+  def summarize(source: String, locations: Long, measures: DataFrame): DataFrame =
+    measures.agg(lit(source).as("source_name"), lit(locations).as("locations"),
+      count(lit(1)).as("measures"), min(col("timestamp")).as("from"),
+      max(col("timestamp")).as("to"))
+
+  /** [[graft.sinks.Sinks.writeEnvelopeJson]]'s per-day v0.1 documents
+    * as (day, value), with the locations gathered by a one-row
+    * `collect_list` aggregate cross-joined to every day's measures. */
+  def crossJoinedEnvelopes(measures: DataFrame, locations: DataFrame,
+                           source: String): DataFrame = {
+    val m = measures.withColumn("timestamp",
+      date_format(col("timestamp"), "yyyy-MM-dd'T'HH:mm:ss'Z'"))
+    val locAgg = locations
+      .agg(collect_list(struct(locations.columns.map(col): _*)).as("locations"))
+    val meta = struct(lit("v0.1").as("schema"), lit(source).as("source"),
+      lit("ingest-id").as("matching_method")).as("meta")
+    m.withColumn("day", substring(col("timestamp"), 1, 10))
+      .groupBy(col("day"))
+      .agg(collect_list(struct(m.columns.map(col): _*)).as("measures"))
+      .crossJoin(locAgg)
+      .select(col("day"),
+        to_json(struct(meta, col("measures"), col("locations"))).as("value"))
+  }
 }

@@ -64,14 +64,14 @@ class PipelinesSpec extends SparkSpec {
     val batch = PurpleAirPipeline.run(spark, fixture("purpleair.json"))
     val st = Transform.stationJson(batch.stations)
     val first = Sinks.diffWriteStations(spark, st, "sensor_node_id", "json",
-      s"$out/stations")
+      s"$out/stations")._1
     assert(first.count() == 2)
     val second = Sinks.diffWriteStations(spark, st, "sensor_node_id", "json",
-      s"$out/stations")
+      s"$out/stations")._1
     assert(second.count() == 0)
     // FORCE overrides the diff (providers.js FORCE env)
     val forced = Sinks.diffWriteStations(spark, st, "sensor_node_id", "json",
-      s"$out/stations", force = true)
+      s"$out/stations", force = true)._1
     assert(forced.count() == 2)
   }
 
@@ -85,14 +85,14 @@ class PipelinesSpec extends SparkSpec {
     def files = snap.listFiles().map(f => f.getName -> f.lastModified()).toSet
     val before = files
     val (same, jobs) = jobsDuring(Sinks.diffWriteStations(spark, st,
-      "sensor_node_id", "json", snap.toString))
+      "sensor_node_id", "json", snap.toString)._1)
     assert(jobs <= 5, s"unchanged warm diff ran $jobs Spark jobs")
     assert(same.count() == 0)
     assert(files == before, "an unchanged batch rewrote the snapshot")
     val renamed = st.withColumn("json", when($"sensor_node_id" === "purpleair-123",
       regexp_replace($"json", "Site A", "Site A2")).otherwise($"json"))
     val (changed, jobs2) = jobsDuring(Sinks.diffWriteStations(spark, renamed,
-      "sensor_node_id", "json", snap.toString))
+      "sensor_node_id", "json", snap.toString)._1)
     assert(jobs2 <= 5, s"changed warm diff ran $jobs2 Spark jobs")
     assert(changed.select("sensor_node_id").as[String].collect().toSeq ==
       Seq("purpleair-123"))
@@ -120,7 +120,7 @@ class PipelinesSpec extends SparkSpec {
   test("K2 measures CSV sink: header contract, gzip, ISO timestamps") {
     val out = java.nio.file.Files.createTempDirectory("graft_k2_").toString
     val batch = PurpleAirPipeline.run(spark, fixture("purpleair.json"))
-    val n = Sinks.writeMeasuresCsv(batch.measures, s"$out/m")
+    val n = Sinks.writeMeasuresCsv(batch.measures, s"$out/m").measures
     assert(n == 26)
     val files = new java.io.File(s"$out/m").listFiles()
       .filter(_.getName.endsWith(".csv.gz"))
@@ -205,7 +205,7 @@ class PipelinesSpec extends SparkSpec {
     Sinks.dryRunBase = Some(dry)
     try {
       val batch = PurpleAirPipeline.run(spark, fixture("purpleair.json"))
-      val n = Sinks.writeMeasuresCsv(batch.measures, s"$prod/measures")
+      val n = Sinks.writeMeasuresCsv(batch.measures, s"$prod/measures").measures
       assert(n == 26)
       // nothing written to the production prefix; all under dry base
       assert(!new java.io.File(prod).exists())
@@ -233,7 +233,7 @@ class PipelinesSpec extends SparkSpec {
     }
     spark.listenerManager.register(ql)
     try {
-      val n = Sinks.writeMeasuresCsv(batch.measures, s"$out/m1")
+      val n = Sinks.writeMeasuresCsv(batch.measures, s"$out/m1").measures
       assert(n == 26)
       // listener bus is async — wait for the event(s) to drain
       val deadline = System.currentTimeMillis() + 10000
@@ -244,13 +244,12 @@ class PipelinesSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(ql)
     // K7 write-then-unlink: empty batch leaves no object behind
     val n0 = Sinks.writeMeasuresCsv(
-      batch.measures.filter(lit(false)), s"$out/m0")
+      batch.measures.filter(lit(false)), s"$out/m0").measures
     assert(n0 == 0)
     assert(!new java.io.File(s"$out/m0").exists())
   }
 
-  test("K3 partitioned envelope: per-day docs, partition pruning, " +
-    "single-doc compat mode") {
+  test("K3 partitioned envelope: per-day docs, partition pruning") {
     val out = java.nio.file.Files.createTempDirectory("graft_k3_").toString
     val m = Seq(
       ("s1", 1.0, java.sql.Timestamp.valueOf("2024-01-01 10:00:00")),
@@ -258,7 +257,7 @@ class PipelinesSpec extends SparkSpec {
       ("s3", 3.0, java.sql.Timestamp.valueOf("2024-01-02 12:00:00"))
     ).toDF("sensor_id", "measure", "timestamp")
     val locs = Seq(("loc1", "Site One")).toDF("id", "label")
-    assert(Sinks.writeEnvelopeJson(m, locs, "prov", s"$out/env"))
+    assert(Sinks.writeEnvelopeJson(m, locs, "prov", s"$out/env")._1)
     val back = spark.read.text(s"$out/env")
     assert(back.count() == 2) // one envelope per day with measures
     val q = back.filter(col("day") === "2024-01-01")
@@ -272,13 +271,9 @@ class PipelinesSpec extends SparkSpec {
     val doc = q.select("value").as[String].first()
     assert(doc.contains("\"schema\":\"v0.1\"") && doc.contains("\"s1\"")
       && !doc.contains("\"s2\"") && doc.contains("Site One"))
-    // reference-compat single document
-    assert(Sinks.writeEnvelopeJson(m, locs, "prov", s"$out/env1",
-      singleDocument = true))
-    assert(spark.read.text(s"$out/env1").count() == 1)
     // K7: empty in → nothing on disk
     assert(!Sinks.writeEnvelopeJson(m.filter(lit(false)),
-      locs.filter(lit(false)), "prov", s"$out/env0"))
+      locs.filter(lit(false)), "prov", s"$out/env0")._1)
     assert(!new java.io.File(s"$out/env0").exists())
   }
 

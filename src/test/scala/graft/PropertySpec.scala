@@ -342,9 +342,9 @@ class PropertySpec extends SparkSpec {
         val df = contents.distinct.zipWithIndex
           .map { case (c, i) => (s"k$i", c) }.toDF("key", "json")
         val first = graft.sinks.Sinks
-          .diffWriteStations(spark, df, "key", "json", s"$out/s")
+          .diffWriteStations(spark, df, "key", "json", s"$out/s")._1
         val second = graft.sinks.Sinks
-          .diffWriteStations(spark, df, "key", "json", s"$out/s")
+          .diffWriteStations(spark, df, "key", "json", s"$out/s")._1
         assert(first.count() == contents.distinct.length.toLong)
         assert(second.count() == 0)
     }
@@ -560,7 +560,7 @@ class QuirksSpec extends SparkSpec {
     // reference `if (measure) continue` pushes only falsy measures (bug);
     // this engine drops null/NaN and keeps real values (documented fix)
     val df = Seq(Some(1.5), Some(0.0), None).toDF("value")
-    val kept = Transform.dropNullMeasures(df, "value").as[Double].collect()
+    val kept = Transform.dropNullMeasures(df).as[Double].collect()
     assert(kept.toSet == Set(1.5, 0.0))
   }
 

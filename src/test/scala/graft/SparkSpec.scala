@@ -32,6 +32,16 @@ trait SparkSpec extends AnyFunSuite {
     super.withFixture(test)
   }
 
+  /** Print the suite's elapsed time to stderr when it ends, so a test
+    * tail shows where the time went. */
+  override def run(testName: Option[String],
+                   args: org.scalatest.Args): org.scalatest.Status = {
+    val t0 = System.nanoTime()
+    try super.run(testName, args)
+    finally System.err.println(
+      f"[graft-test] $suiteName took ${(System.nanoTime() - t0) / 1e9}%.1f s")
+  }
+
   lazy val sf0001 = "/root/testdata/sf0.001"
 
   /** Drop a managed table AND its warehouse directory — the in-memory

@@ -143,7 +143,7 @@ class V01Providers2Spec extends SparkSpec {
       assert(jobs == 0, s"$p: collecting the K5 summary ran $jobs Spark jobs")
       // the summary the sinks observed equals the old recomputed aggregate
       val b = Pipelines.registry(p).run(spark, fixtureInput(p))
-      val old = graft.sinks.Sinks.summarize(p, b.stations.count(), b.measures)
+      val old = Oracles.summarize(p, b.stations.count(), b.measures)
       assert(summary.schema == old.schema, p)
       assert(rows.toSeq == old.collect().toSeq, p)
       val r = rows.head
@@ -157,6 +157,40 @@ class V01Providers2Spec extends SparkSpec {
     for (p <- Pipelines.registry.keys.toSeq.sorted) {
       val (_, jobs) = jobsDuring(Pipelines.registry(p).run(spark, fixtureInput(p)))
       assert(jobs == 0, s"$p: building the batch ran $jobs Spark jobs")
+    }
+  }
+
+  test("K3 envelopes equal the cross-joined oracle on all 12 v0.1 " +
+    "fixtures, in at most 50 jobs") {
+    val out = java.nio.file.Files.createTempDirectory("graft_env_").toString
+    val v01 = Pipelines.registry.values.filter(_.isV01).toSeq.sortBy(_.name)
+    assert(v01.size == 12)
+    val batches = v01.map(p => p.name -> p.run(spark, fixtureInput(p.name)))
+    val (written, jobs) = jobsDuring(batches.map { case (p, b) =>
+      graft.sinks.Sinks.writeEnvelopeJson(b.measures.drop("flags"),
+        b.stations, p, s"$out/$p")._1
+    })
+    assert(written.forall(identity))
+    assert(jobs <= 50, s"the 12 envelope writes ran $jobs Spark jobs")
+    for ((p, b) <- batches) {
+      val got = spark.read.text(s"$out/$p").select("day", "value")
+        .as[(String, String)].collect().toSet
+      val want = Oracles.crossJoinedEnvelopes(b.measures.drop("flags"),
+        b.stations, p).as[(String, String)].collect().toSet
+      assert(got.nonEmpty && got == want, p)
+    }
+  }
+
+  test("a JSON payload is parsed once per scan under an explode") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import graft.model.Schemas.Payload
+    for ((file, schema) <- Seq("purpleair.json" -> Payload.purpleair,
+        "clarity.json" -> Payload.clarity)) {
+      val plan = graft.sources.Ingest.readJson(spark, fixture(file), schema)
+        .select(explode(col("data"))).queryExecution.optimizedPlan
+      val parses = plan.flatMap(_.expressions.flatMap(
+        _.collect { case j: JsonToStructs => j }))
+      assert(parses.size == 1, s"$file: ${parses.size} from_json in\n$plan")
     }
   }
 }
